@@ -20,7 +20,7 @@ object AnnBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
     val dim = 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark: SparkSession = Tables.newSession("graft-annbench", s"local[$cpus]", cpus)
     import spark.implicits._
 

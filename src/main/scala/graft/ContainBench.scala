@@ -69,7 +69,7 @@ object ContainBench {
     val small = args.lift(0).map(_.toLong).getOrElse(50000L)
     val big = args.lift(1).map(_.toLong).getOrElse(500000L)
     val out = args.lift(2).getOrElse("CONTAINBENCH.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-contain-bench", s"local[$cpus]", cpus)
     import graft.dedup.Containment
 

@@ -33,7 +33,7 @@ object DedupBench {
     val n = if (args.nonEmpty) args(0).toInt else 100000
     val mega = if (args.length > 1) args(1).toInt else 0
     val out = args.lift(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-dedup-bench", s"local[$cpus]", cpus)
     import spark.implicits._
 

@@ -27,7 +27,7 @@ object GraphFixpointBench {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val out = args.lift(1).getOrElse("GRAPHFIXBENCH_r18.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-fixpoint-bench", s"local[$cpus]", cpus)
     import spark.implicits._
 

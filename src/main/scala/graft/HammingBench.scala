@@ -47,7 +47,7 @@ object HammingBench {
     val artifact = if (args.length > 3) Some(args(3)) else None
     val sharded =
       if (args.length > 4) args(4) == "sharded" else n > 150000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-hamming-bench", s"local[$cpus]", cpus)
     // the banded explode is tables × N rows — size partitions so each
     // window-sort partition stays memory-resident instead of one giant

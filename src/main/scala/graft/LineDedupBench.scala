@@ -32,7 +32,7 @@ object LineDedupBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(400000)
     val out = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-linededupbench", s"local[$cpus]", cpus)
 
     val maxTaskRows = new java.util.concurrent.atomic.AtomicLong()

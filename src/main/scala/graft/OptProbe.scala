@@ -10,13 +10,12 @@ import scala.collection.mutable
   * localCheckpoint materializations, broadcast builds) instead of
   * guessed from the query total. Usage:
   *
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.OptProbe g02_hits g01_pagerank"
+  *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.OptProbe g02_hits g01_pagerank"
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     // ad-hoc conf overrides for isolation experiments, e.g.
     // SPARK_GRAFT_PROBE_CONF="spark.sql.adaptive.enabled=false;k=v"
     // (system properties so static/core confs are honored at context init)

@@ -39,7 +39,7 @@ object PhraseBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/graft_sf1")
     val out = args.lift(1).getOrElse("PHRASEBENCH_r17.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-phrase-bench", s"local[$cpus]", cpus)
     import spark.implicits._
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")

@@ -25,7 +25,7 @@ object RangeJoinBench {
   def main(args: Array[String]): Unit = {
     val factsBig = args.headOption.map(_.toInt).getOrElse(2000000)
     val out = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-rangejoinbench", s"local[$cpus]", cpus)
 
     val span = 1000000.0

@@ -148,7 +148,7 @@ object ScaleBench {
     val small = args.lift(0).getOrElse("/tmp/graft_sf1")
     val big = args.lift(1).getOrElse("/tmp/graft_sf10")
     val out = args.lift(2).getOrElse("BENCH_sf10_r12.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // fixed-partition max-task interpretability is the default (see the
     // header); the overrides exist to DEMONSTRATE the cluster behavior —

@@ -27,7 +27,7 @@ object SemDedupBench {
     val mega = args.drop(1).headOption.map(_.toInt).getOrElse(0)
     val dim = 32
     val nCentroids = math.max(16, math.sqrt(n.toDouble).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-semdedupbench", s"local[$cpus]", cpus)
 
     val nCenters = 500

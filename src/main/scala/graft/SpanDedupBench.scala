@@ -15,7 +15,7 @@ import graft.dedup.Dedup
 object SpanDedupBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-spanbench", s"local[$cpus]", cpus)
 
     // 90 unique tokens (vocab wide enough that cross-doc span collisions

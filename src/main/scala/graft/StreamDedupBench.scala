@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
 object StreamDedupBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(10000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-streamdedupbench", s"local[$cpus]", cpus)
     spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     import spark.implicits._

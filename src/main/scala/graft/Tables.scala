@@ -35,6 +35,12 @@ object Tables {
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Cores for a `local[N]` session: `SPARK_GRAFT_CPUS` when the
+    * deployment sets it, else the cores this JVM may use.
+    */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Common builder knobs for a scale-ready session. Local tests use
     * local[N]; on a cluster the same settings (AQE, skew-join) carry over.
     */
@@ -53,9 +59,7 @@ object Tables {
       // serialized sort writer (UnsafeShuffleWriter, one file per map
       // task); threshold 1 simply aligns small-R shuffles with that same
       // single-file path — nothing here is tuned to the local core count.
-      // Parameterised for A/B: SPARK_GRAFT_BYPASS_MERGE overrides.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Subset-key co-partitioning for joins (optimization round 19,
@@ -68,9 +72,7 @@ object Tables {
       // guards against skewed subset keys; this engine's join keys are
       // either unskewed by construction (doc ids) or explicitly salted
       // (Skew.saltedTopN/saltedJoin), and AQE skew-join remains on.
-      // Parameterised for A/B: SPARK_GRAFT_COPART_ALL overrides.
-      .config("spark.sql.requireAllClusterKeysForCoPartition",
-        sys.env.getOrElse("SPARK_GRAFT_COPART_ALL", "false"))
+      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       // let AQE re-plan (skew splits, broadcast conversion) inside cached
       // plans too — the default false pins a cached pipeline stage to its
       // static plan, which is exactly where a skewed dedup join needs the

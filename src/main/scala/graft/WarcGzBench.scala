@@ -23,7 +23,7 @@ object WarcGzBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
     val out = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-warcgzbench", s"local[$cpus]", cpus)
 
     val dir = Files.createDirectories(Paths.get("target/tmp/warcgzbench"))

@@ -15,7 +15,7 @@ object WikiBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 200000
     val dir = if (args.length > 1) args(1) else s"/tmp/graft_wiki_bench_$n"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-wiki-bench", s"local[$cpus]", cpus)
     import spark.implicits._
 

@@ -68,7 +68,7 @@ object ZOrderBench {
     val rows = args.headOption.map(_.toInt).getOrElse(4000000)
     val files = args.lift(1).map(_.toInt).getOrElse(256)
     val out = args.lift(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark = Tables.newSession("graft-zorderbench", s"local[$cpus]", cpus)
 
     val base = spark.range(rows).select(

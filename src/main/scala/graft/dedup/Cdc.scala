@@ -202,7 +202,7 @@ object Cdc {
       chunkTable(df, binCol, idCol, minSize, avgBits, maxSize)
         .groupBy(col("id"), col("chunk_hash"))
         .agg(min(col("length")).as("length")),
-      StorageLevel.DISK_ONLY)
+      StorageLevel.DISK_ONLY).df
 
     // batch-first winner per distinct chunk: partial-agg min(id)
     val winners = perBlob.groupBy("chunk_hash")

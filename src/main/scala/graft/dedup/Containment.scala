@@ -95,9 +95,9 @@ object Containment {
     // the scan's task count (measured: 3.9 cpu-s on one task at sf0.1).
     // Against the RDD leaf nothing pushes down; the filter is a cheap
     // int comparison per cached row.
-    val (arrAll, release) = Bridge.persistedCopyReleasable(
+    val persisted = Bridge.persistedCopy(
       setsFrameUnfiltered(df, setCol, idCol), StorageLevel.MEMORY_AND_DISK)
-    val arr = arrAll.filter(col("__na") >= 1)
+    val arr = persisted.df.filter(col("__na") >= 1)
 
     val cand = candidatePairs(arr, tauPct, minElems, prefixFilter)
 
@@ -127,7 +127,7 @@ object Containment {
     // (the minhashCandidates discipline — pairs are the corpus's
     // duplicate structure, tiny next to the corpus itself)
     val out = materialize.cutEager(verified, "containment-pairs")
-    release()
+    persisted.release()
     out
   }
 

@@ -70,9 +70,10 @@ private[graft] trait DedupHamming { this: Dedup.type =>
   def hammingDropIds(skeleton: DataFrame, maxHamming: Int,
                      maxBucket: Int = 10000): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming")
-    val (sk, release) = org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted = org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
       skeleton.select(col("id"), col("h")),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sk = persisted.df
     val reps = sk.groupBy(col("h")).agg(min(col("id")).as("id"))
     val pairs = hammingBandPairs(reps, Nil, maxHamming, maxBucket)
     // exact-tier drops (same fingerprint, not the min id) plus near-tier
@@ -87,7 +88,7 @@ private[graft] trait DedupHamming { this: Dedup.type =>
     // eager + lineage-truncated so the skeleton cache can be dropped NOW
     // (fault-tolerance trade documented in the scaladoc above)
     val drop = exactDrop.union(nearDrop).distinct().localCheckpoint()
-    release()
+    persisted.release()
     drop
   }
 
@@ -437,15 +438,16 @@ private[graft] trait DedupHamming { this: Dedup.type =>
   private[graft] def nearDedupAgainstHammingIndex(
       df: DataFrame, skeleton: DataFrame, idCol: String, table: String,
       update: Boolean): DataFrame = {
-    val (skel, release) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         skeleton, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val skel = persisted.df
     val dupIds = hammingDupIdsAgainstIndex(skel, table).localCheckpoint()
     val survivors = df.join(dupIds.withColumnRenamed("id", idCol),
       Seq(idCol), "left_anti").localCheckpoint()
     if (update) appendToHammingIndex(
       skel.join(dupIds, Seq("id"), "left_anti"), table)
-    release()
+    persisted.release()
     survivors
   }
 }

@@ -190,11 +190,12 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
     // coupling that routed a mega-bucket's whole membership through ONE
     // window-sort task (the last corpus-scaling window in the dedup
     // family).
-    val (bb, releaseBb) = Bridge.persistedCopyReleasable(
+    val persistedBb = Bridge.persistedCopy(
       sigs.select(col(idCol), xxhash64(col("sig")).as("__sg"),
         posexplode(bandBucketsUdf(bands)(col("sig"))).as(Seq("band", "bucket"))),
       StorageLevel.MEMORY_AND_DISK) // skeleton rows are 32 B — the
     // hammingDropIds level; released before return either way
+    val bb = persistedBb.df
     // bucket sizes by PARTIAL-AGG (the count exchange carries at most one
     // row per (band, bucket) per map partition regardless of skew), then
     // the small/mega SPLIT routes through the MEGA-KEY LIST, not a
@@ -231,7 +232,7 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
       val result = materialize.cutEager(
         l.join(r, Seq("band", "bucket")).filter(col("a") < col("b"))
           .select("a", "b").distinct(), "minhash-pairs")
-      releaseBb()
+      persistedBb.release()
       return result
     }
     val mk = if (nMega <= 4000000L) broadcast(megaKeys) else megaKeys
@@ -250,12 +251,13 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
     // stitched from a first/last-row boundary frame of ≤ one row per
     // partition. least/greatest keeps the (a < b) pair convention
     // nearDedup's drop-the-b-side rule depends on.
-    val (mega, releaseMega) = Bridge.persistedCopyReleasable(
+    val persistedMega = Bridge.persistedCopy(
       bb.join(mk, Seq("band", "bucket"), "left_semi")
         .select(col("band"), col("bucket"), col("__sg"), col(idCol))
         .repartitionByRange(col("band"), col("bucket"), col("__sg"), col(idCol))
         .withColumn("__pid", spark_partition_id()),
       StorageLevel.DISK_ONLY)
+    val mega = persistedMega.df
     val wPid = Window.partitionBy(col("__pid"))
       .orderBy(col("band"), col("bucket"), col("__sg"), col(idCol))
     val inner = mega
@@ -290,7 +292,7 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
     // executor loss on preemptible fleets)
     val result = materialize.cutEager(
       exhaustive.union(inner).union(stitch).distinct(), "minhash-pairs")
-    releaseMega(); releaseBb()
+    persistedMega.release(); persistedBb.release()
     result
   }
 
@@ -480,11 +482,12 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
     val (k, numHashes, bands) = (sp.getInt(0), sp.getInt(1), sp.getInt(2))
     // the batch signature pass feeds BOTH the band branch and the verify
     // join — persist the (id, sig) skeletons so the UDF pass runs once
-    val (bsigs, releaseBsigs) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         batch.select(col(idCol).as("__bid"),
           minhashSignatureFromText(col(textCol), k, numHashes).as("__bsig")),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bsigs = persisted.df
     val bbands = bsigs.select(col("__bid"),
       posexplode(bandBucketsUdf(bands)(col("__bsig"))).as(Seq("band", "bucket")))
     val cand = bbands.join(spark.table(table), Seq("band", "bucket"))
@@ -496,7 +499,7 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
       .select(col("__bid").as("batch_id"), col("__cid").as("corpus_id"),
         sigMatchUdf(col("__bsig"), col("__csig")).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
-    (pairs, releaseBsigs)
+    (pairs, () => persisted.release())
   }
 
   // fraction of matching minhash components — E[frac] = Jaccard

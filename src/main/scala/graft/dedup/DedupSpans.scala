@@ -40,15 +40,18 @@ private[graft] trait DedupSpans { this: Dedup.type =>
     *
     * Returns the skeleton's rows plus a boolean `markCol`; the persisted
     * blocks are freed as soon as the first query consuming the result
-    * completes (`Bridge.persistedCopyAutoRelease` — a repeated-batch
-    * driver accumulates no disk blocks between GCs; a caller re-running
-    * an action on the same result recomputes the skeleton, correctly).
+    * completes (the `Bridge.persistedCopy` handle's `releaseAfterNextUse`
+    * — a repeated-batch driver accumulates no disk blocks between GCs; a
+    * caller re-running an action on the same result recomputes the
+    * skeleton, correctly).
     */
   private def markCorpusFirst(perDoc: DataFrame, keyCols: Seq[String],
                               idCol: String, markCol: String,
                               extraAgg: Seq[(String, Column)] = Nil): DataFrame = {
-    val pd = org.apache.spark.sql.graftbridge.Bridge.persistedCopyAutoRelease(
+    val persisted = org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
       perDoc, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    persisted.releaseAfterNextUse()
+    val pd = persisted.df
     // optional extra PER-KEY aggregates (e.g. total occurrence count for
     // the repeat-mining tier) ride the same partial-agg exchange and reach
     // only the WINNER row through the composite join-back — no second
@@ -362,11 +365,10 @@ private[graft] trait DedupSpans { this: Dedup.type =>
     * §2.3/§5): `"strings"` and `"ranks"` force their engine (results
     * identical — spec-pinned); `"auto"` picks the prefix-doubling RANK
     * engine once the INPUT's estimated bytes reach
-    * `spark.graft.dedup.rankEngineMinBytes` (conf, else env
-    * `SPARK_GRAFT_RANK_MIN_BYTES`, default 64 GiB) and the window-string
-    * engine below it. Rationale, measured honestly (RepeatDedupBench):
-    * at local/in-memory shuffle speeds the one wide window-string
-    * exchange wins wall clock ~4×, but its exchange bytes are
+    * `spark.graft.dedup.rankEngineMinBytes` (conf, default 64 GiB) and
+    * the window-string engine below it. Rationale, measured honestly
+    * (RepeatDedupBench): at local/in-memory shuffle speeds the one wide
+    * window-string exchange wins wall clock ~4×, but its exchange bytes are
     * O(L × token bytes) per position (~6× the corpus at L=8, ~40× at the
     * Lee-et-al. L=50) where the rank engine shuffles O(log L) fixed
     * 24-byte rounds — the axis that binds once the exchange crosses a
@@ -387,7 +389,6 @@ private[graft] trait DedupSpans { this: Dedup.type =>
         !hashWindows && {
           val thr = df.sparkSession.conf
             .getOption("spark.graft.dedup.rankEngineMinBytes")
-            .orElse(sys.env.get("SPARK_GRAFT_RANK_MIN_BYTES"))
             .map(_.toLong).getOrElse(64L << 30)
           df.queryExecution.optimizedPlan.stats.sizeInBytes >= thr
         }
@@ -474,8 +475,10 @@ private[graft] trait DedupSpans { this: Dedup.type =>
     // and the emit read one materialization; the index survives partial
     // recomputation because the sort key is total over distinct values.
     def denseLabels(distinctDf: DataFrame, key: Column): DataFrame = {
-      val sorted = Bridge.persistedCopyAutoRelease(distinctDf.sort(key),
+      val persisted = Bridge.persistedCopy(distinctDf.sort(key),
         StorageLevel.MEMORY_AND_DISK)
+      persisted.releaseAfterNextUse()
+      val sorted = persisted.df
       val schema = StructType(sorted.schema.fields :+
         StructField("__r", LongType, nullable = false))
       sorted.sparkSession.createDataFrame(
@@ -500,9 +503,11 @@ private[graft] trait DedupSpans { this: Dedup.type =>
           i => struct(element_at(col("__rks"), i + 1).as("x"),
             element_at(col("__rks"), i + w + 1).as("y"))))
         .otherwise(array())
-      val occ = Bridge.persistedCopyAutoRelease(
+      val persisted = Bridge.persistedCopy(
         cur.select(col(idCol), posexplode(pairCol).as(Seq("pos", "__p"))),
         StorageLevel.MEMORY_AND_DISK)
+      persisted.releaseAfterNextUse()
+      val occ = persisted.df
       val lab = denseLabels(occ.select(col("__p")).distinct(), col("__p"))
       cur = occ.join(lab, "__p")
         .groupBy(col(idCol))

@@ -449,12 +449,13 @@ object Multimodal {
       s"n=$n minMatches=$minMatches")
     // one decode pass hashes every sampled frame; persisted because the
     // exact tier, the rep filter, and the band stage all read it
-    val (frames, releaseFrames) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persistedFrames =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         perceptualHash(sampleFramesDecoded(
           media.select(col("media_id"), col("content")), n))
           .select(col("media_id"), col("frame_idx"), col("phash")),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val frames = persistedFrames.df
     val vecs = frames.groupBy(col("media_id"))
       .agg(count(col("phash")).as("__nh"),
         sort_array(collect_list(struct(col("frame_idx"), col("phash"))))
@@ -486,7 +487,7 @@ object Multimodal {
     // eager + lineage-truncated so the decoded-frame cache releases now
     // (the hammingDropIds hygiene contract)
     val drop = exactDrop.union(nearDrop).distinct().localCheckpoint()
-    releaseFrames()
+    persistedFrames.release()
     media.join(drop.withColumnRenamed("id", "media_id"),
       Seq("media_id"), "left_anti")
   }
@@ -535,10 +536,11 @@ object Multimodal {
     // fingerprint-keyed shuffle — the surviving ids are resolved on
     // skeletons and the payload rides only the final unskewed id
     // semi-join (the discipline of every dedup tier here)
-    val (skel, releaseSkel) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persistedSkel =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         fingerprintSkeleton(media, phashCol),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val skel = persistedSkel.df
     val nullIds = skel.filter(col("phash").isNull).select(col("media_id"))
     // within-batch keep-min per fingerprint collapses map-side
     val reps = skel.filter(col("phash").isNotNull)
@@ -561,7 +563,7 @@ object Multimodal {
     // set is FIXED — late re-reads can never re-run the anti-join
     // against a registry later batches have grown
     val kept = keptIds.localCheckpoint()
-    releaseSkel()
+    persistedSkel.release()
     media.join(kept, Seq("media_id"), "left_semi")
   }
 

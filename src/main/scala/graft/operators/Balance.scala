@@ -36,16 +36,11 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * under task retry (SPARK-23207).
   */
 object Balance {
-  // A/B kill-switch for scale evidence (round-19 judge item): the guard
-  // is data-layout-adaptive, but a cluster A/B record needs both arms
-  // measurable without a rebuild. "off" disables the repartition.
-  private val enabled = !sys.env.get("SPARK_GRAFT_BALANCE").contains("off")
-
   def input(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
     val cores = spark.sparkContext.defaultParallelism
-    if (!enabled || !scanLevel(df.queryExecution.optimizedPlan)) df
+    if (!scanLevel(df.queryExecution.optimizedPlan)) df
     else {
       // internal-row RDD: partition count without building the Row
       // deserialization layer; no job runs (an exchange-free plan is

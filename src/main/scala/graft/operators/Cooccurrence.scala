@@ -47,18 +47,19 @@ object Cooccurrence {
       col(itemCol).as("__item")).distinct()
     // the basket frame feeds three consumers (total, item counts, pair
     // expansion) — persisted so the distinct+fold pass runs ONCE, with
-    // the total-count probe as the cache fill (probe-then-arm: the
-    // caller's action consumes and releases, the r18 Bridge contract)
-    val (baskets, armRelease) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyArmable(
+    // the total-count probe as the cache fill (probe, then
+    // releaseAfterNextUse: the caller's action consumes and releases)
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         items.groupBy(col("__basket"))
           .agg(sort_array(collect_set(col("__item"))).as("__items"))
           .filter(size(col("__items")) <= maxBasket),
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val baskets = persisted.df
     // both denominators come from the KEPT baskets — support, confidence
     // and lift all describe the same (capped) population
     val total = baskets.count()
-    armRelease()
+    persisted.releaseAfterNextUse()
     val counts = baskets.select(explode(col("__items")).as("__item"))
       .groupBy(col("__item")).agg(count(lit(1)).as("__n"))
     // row-local unordered pair expansion over the sorted set: i < j ⇒

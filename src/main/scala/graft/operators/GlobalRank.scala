@@ -66,16 +66,17 @@ object GlobalRank {
     require(sortCols.nonEmpty, "GlobalRank: no sort columns")
     val spark = df.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
-    val (ranged, armRelease) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyArmable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         df.repartitionByRange(parts, sortCols: _*)
           .withColumn("__gr_pid", spark_partition_id()),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranged = persisted.df
     // tiny: one row per partition. The probe fills the ranged cache.
     val counts = ranged.groupBy(col("__gr_pid"))
       .agg(count(lit(1)).as("__c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    armRelease()
+    persisted.releaseAfterNextUse()
     val total = counts.map(_._2).sum
     val offsets = counts.map(_._1)
       .zip(counts.map(_._2).scanLeft(0L)(_ + _))

@@ -98,8 +98,8 @@ object HeavyHitters {
     // one scan: per-partition MG summaries + a per-partition row total
     // (the total row carries a negative tag; real summaries are ≥ 1).
     // Persisted lineage-cut because three plans consume it.
-    val (summaries, release) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         keys.mapPartitions { it =>
           var n = 0L
           val counted = it.map { s => if (s != null) n += 1; s }
@@ -108,6 +108,7 @@ object HeavyHitters {
             Iterator.single((null.asInstanceOf[String], -n - 1))
         }.toDF("key", "mg_cnt"),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val summaries = persisted.df
 
     val total = summaries.filter(col("mg_cnt") < 0)
       .agg(sum(-col("mg_cnt") - 1).as("__n"))
@@ -123,7 +124,7 @@ object HeavyHitters {
       // decimal(21,0)·decimal(7,0) → decimal(29,0), exact and overflow-free.
       .filter(col("cnt").cast("decimal(21,0)") * lit(1000000L).cast("decimal(7,0)") >
         lit(fracPpm).cast("decimal(7,0)") * col("__n").cast("decimal(21,0)"))
-      .select(col("key"), col("cnt")) -> release
+      .select(col("key"), col("cnt")) -> (() => persisted.release())
   }
 
   /** PER-GROUP exact heavy hitters: keys with count > fracPpm·n_g/10⁶
@@ -205,8 +206,8 @@ object HeavyHitters {
     import spark.implicits._
 
     val keys: Dataset[String] = df.select(col(keyCol).cast("string")).as[String]
-    val (summaries, release) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         keys.mapPartitions { it =>
           var n = 0L
           val counted = it.map { s => if (s != null) n += 1; s }
@@ -214,6 +215,7 @@ object HeavyHitters {
           mg.iterator ++ Iterator.single((null.asInstanceOf[String], -n - 1))
         }.toDF("key", "mg_cnt"),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val summaries = persisted.df
     val total = summaries.filter(col("mg_cnt") < 0)
       .agg(sum(-col("mg_cnt") - 1).as("__n"))
     val candidates = summaries.filter(col("mg_cnt") > 0)
@@ -231,7 +233,7 @@ object HeavyHitters {
       col("__n").cast("long").as("cnt"), lit(k).cast("int").as("kb"))
     val delta = graft.sources.Warehouse.appendBucketedWithDelta(
       kept.unionByName(totalRow), table, "key")
-    release()
+    persisted.release()
     if (delta.isEmpty) 0L
     else spark.read.parquet(delta: _*).filter(col("key").isNotNull).count()
   }
@@ -300,10 +302,11 @@ object HeavyHitters {
                              maxGroups: Int = 100000): Long = {
     require(k >= 1, s"k must be >= 1: $k")
     val spark = df.sparkSession
-    val (summaries, release) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         groupedMgSummaries(df, groupCol, keyCol, k, maxGroups),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val summaries = persisted.df
     val totals = summaries.filter(col("mg_cnt") < 0)
       .groupBy("g").agg(sum(-col("mg_cnt") - 1).as("__n"))
     val candidates = summaries.filter(col("mg_cnt") > 0)
@@ -325,7 +328,7 @@ object HeavyHitters {
       lit(k).cast("int").as("kb"))
     val delta = graft.sources.Warehouse.appendBucketedWithDelta(
       kept.unionByName(totalRows), table, "g")
-    release()
+    persisted.release()
     if (delta.isEmpty) 0L
     else spark.read.parquet(delta: _*).filter(col("key").isNotNull).count()
   }
@@ -439,9 +442,10 @@ object HeavyHitters {
     val summaries = groupedMgSummaries(df, groupCol, keyCol, k, maxGroups)
     // three consumers (totals, candidates, and the returned plan) — one
     // lineage-cut persisted copy keeps the MG pass to a single execution
-    val (summarized, release) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyReleasable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         summaries, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val summarized = persisted.df
 
     val totals = summarized.filter(col("mg_cnt") < 0)
       .groupBy("g").agg(sum(-col("mg_cnt") - 1).as("__n"))
@@ -461,6 +465,6 @@ object HeavyHitters {
       .filter(col("cnt").cast("decimal(21,0)") * lit(1000000L).cast("decimal(7,0)") >
         lit(fracPpm).cast("decimal(7,0)") * col("__n").cast("decimal(21,0)"))
       .select(col("g").as(groupCol), col("key").as(keyCol), col("cnt")) ->
-      release
+      (() => persisted.release())
   }
 }

@@ -78,15 +78,15 @@ object WeightedQuantile {
     // the binned (group, value, weight, bin) collapse is the only
     // corpus-sized frame and EVERY downstream stage of every ppm reads
     // it: persist it once (DISK_ONLY — a skeleton of the distinct
-    // values, not the corpus). ARMABLE, not auto-release: the recursion
-    // trigger probes below are themselves the first actions over the
-    // frame — with the listener already armed the FIRST probe's query
+    // values, not the corpus). releaseAfterNextUse is armed only after
+    // the recursion trigger probes below, which are themselves the first
+    // actions over the frame — armed earlier, the FIRST probe's query
     // end would release (racing the async listener bus) the cache every
     // later probe and the caller's materialization need (the r17
     // advisory). Probe first, THEN arm: the probes fill the cache, the
     // caller's first action consumes and releases it.
-    val (binned, armRelease) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyArmable(
+    val persisted =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
         byVal.join(broadcast(stats), groupCol)
           .withColumn("__bin",
             when(col("__mx") === col("__mn"), lit(0L))
@@ -100,6 +100,7 @@ object WeightedQuantile {
           // never the group extent
           .drop("__mn", "__mx"),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val binned = persisted.df
     // pass 1 (ppm-independent): bin histogram with per-bin VALUE EXTENT
     // and weight riding the same aggregation, so each ppm's recursion
     // trigger is decided from this <= bins-row-per-group skeleton — no
@@ -200,7 +201,7 @@ object WeightedQuantile {
       }
       quantilePpm -> branch
     }.toMap
-    armRelease()
+    persisted.releaseAfterNextUse()
     out
   }
 }

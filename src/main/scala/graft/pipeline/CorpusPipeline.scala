@@ -47,7 +47,7 @@ sealed trait Materialize {
     case Materialize.Disk =>
       graft.plans.PlanTap.record(s"cut:$tag", df)
       org.apache.spark.sql.graftbridge.Bridge.persistedCopy(df,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        org.apache.spark.storage.StorageLevel.DISK_ONLY).df
     case Materialize.Reliable(dir) =>
       graft.plans.PlanTap.record(s"cut:$tag", df)
       val path = s"$dir/$tag-${java.util.UUID.randomUUID().toString.take(8)}"

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * real join shape invisible to any audit. When tapping is enabled (only
   * [[graft.PlanDump]] does), the shared materialization helpers
   * ([[graft.pipeline.Materialize.cut]]/`cutEager`, the
-  * `Bridge.persistedCopy` family) record the FULL formatted plan of every
+  * `Bridge.persistedCopy`) record the FULL formatted plan of every
   * frame they are about to cut, tagged by call site; PlanDump drains the
   * buffer after each query and appends the pre-barrier plans under the
   * query's section.

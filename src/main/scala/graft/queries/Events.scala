@@ -453,19 +453,20 @@ object Events {
     // partitioning-independent. The user skeleton is persisted once
     // for its three ranking passes.
     "e29_rfm" -> { (s, dir) =>
-      // ARMABLE, armed only after the third ranking is built: each
-      // withNtile runs its count probe at construction, so an
-      // auto-release u would be freed by the FIRST probe's query end
+      // releaseAfterNextUse is armed only after the third ranking is
+      // built: each withNtile runs its count probe at construction, so
+      // if armed earlier, u would be freed by the FIRST probe's query end
       // and the next two would re-execute the corpus aggregation (the
       // r17 advisory race, avoided by construction here)
-      val (u, armU) = org.apache.spark.sql.graftbridge.Bridge
-        .persistedCopyArmable(
+      val persistedU = org.apache.spark.sql.graftbridge.Bridge
+        .persistedCopy(
           Tables(s, dir, "events").groupBy(col("user_id"))
             .agg(max(col("ts")).as("last_ts"),
               count(lit(1)).as("n_events"),
               coalesce(sum(expr("CAST(value AS DECIMAL(18,6))")),
                 lit(0).cast("decimal(38,6)")).as("__mon")),
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val u = persistedU.df
       import graft.operators.GlobalRank
       val rs = GlobalRank.withNtile(u,
           Seq(col("last_ts"), col("user_id")), 5, "r_score")
@@ -476,7 +477,7 @@ object Events {
       val ms = GlobalRank.withNtile(u,
           Seq(col("__mon"), col("user_id")), 5, "m_score")
         .select(col("user_id"), col("m_score"))
-      armU()
+      persistedU.releaseAfterNextUse()
       rs.join(fs, "user_id").join(ms, "user_id")
         .withColumn("rfm",
           col("r_score") * 100 + col("f_score") * 10 + col("m_score"))

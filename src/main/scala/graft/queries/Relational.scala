@@ -347,19 +347,21 @@ object Relational {
     // brand's rows; the comparison is exact DECIMAL cross-multiplied
     // (qty·5·cnt < sum — no float average, no boundary drift), the
     // brand dim broadcasts, and the brand's lineitem slice is computed
-    // once (persisted auto-release: both the stats and the final filter
-    // reference it inside the caller's single query).
+    // once (persisted, released after its next use: both the stats and
+    // the final filter reference it inside the caller's single query).
     "q29_small_qty_revenue" -> { (s, dir) =>
       val partsF = Tables(s, dir, "part")
         .filter(col("p_brand") === "Brand#1").select(col("p_partkey"))
-      val liF = org.apache.spark.sql.graftbridge.Bridge
-        .persistedCopyAutoRelease(
+      val persisted = org.apache.spark.sql.graftbridge.Bridge
+        .persistedCopy(
           Tables(s, dir, "lineitem")
             .join(broadcast(partsF), col("l_partkey") === col("p_partkey"))
             .select(col("l_partkey"),
               expr("CAST(l_quantity AS DECIMAL(18,2))").as("__q"),
               expr("CAST(l_extendedprice AS DECIMAL(18,2))").as("__p")),
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      persisted.releaseAfterNextUse()
+      val liF = persisted.df
       val stats = liF.groupBy(col("l_partkey").as("__pk"))
         .agg(sum(col("__q")).as("__sq"), count(lit(1)).as("__n"))
       liF.join(broadcast(stats), col("l_partkey") === col("__pk"))

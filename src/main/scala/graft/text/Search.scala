@@ -48,17 +48,16 @@ object Search {
                    phrase: String): DataFrame = {
     val terms = phraseTerms(phrase)
     val toks = filter(split(lower(col(textCol)), "\\s+"), t => t =!= "")
-    // ARMABLE persist (the r17 advisory): slotIntersect's dfs collect is
-    // itself the first action over this frame — an already-armed
-    // auto-release would free the cache on the collect and every slot
-    // branch of the k-way join would re-tokenize the corpus. The collect
-    // FILLS the cache; slotIntersect arms after it.
-    val (posted, armRelease) =
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopyArmable(
-        df.select(col(idCol), posexplode(toks).as(Seq("__pos", "__term")))
-          .filter(col("__term").isin(terms.distinct: _*)),
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    slotIntersect(posted, idCol, terms, armRelease)
+    // releaseAfterNextUse waits for the probe (the r17 advisory):
+    // slotIntersect's dfs collect is itself the first action over this
+    // frame — armed before it, the release would free the cache on the
+    // collect and every slot branch of the k-way join would re-tokenize
+    // the corpus. The collect FILLS the cache; slotIntersect arms after it.
+    val posted = org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
+      df.select(col(idCol), posexplode(toks).as(Seq("__pos", "__term")))
+        .filter(col("__term").isin(terms.distinct: _*)),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    slotIntersect(posted.df, idCol, terms, () => posted.releaseAfterNextUse())
   }
 
   private def phraseTerms(phrase: String): Seq[String] = {
@@ -123,15 +122,16 @@ object Search {
     val (qt, terms) = phraseBatchTerms(phrases, queryIdCol, queryTextCol)
     val toks = filter(split(lower(col(textCol)), "\\s+"), t => t =!= "")
     // doc-partitioned like phraseProbeBatch: one idCol repartition before
-    // the layout-preserving persist buys every downstream postings-volume
+    // the (layout-preserving) persist buys every downstream postings-volume
     // exchange (same explicit-N contract)
     val spark = df.sparkSession
-    val posted = org.apache.spark.sql.graftbridge.Bridge.persistedCopyPartitionedAutoRelease(
+    val posted = org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
       df.select(col(idCol), posexplode(toks).as(Seq("__pos", "__term")))
         .filter(col("__term").isin(terms: _*))
         .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col(idCol)),
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    batchSlotVerify(posted, qt, queryIdCol, idCol)
+    posted.releaseAfterNextUse()
+    batchSlotVerify(posted.df, qt, queryIdCol, idCol)
   }
 
   // the (query, slot, term) frame + distinct term union of a phrase
@@ -266,7 +266,7 @@ object Search {
                        queryIdCol: String, queryTextCol: String): DataFrame = {
     val (qt, terms) = phraseBatchTerms(phrases, queryIdCol, queryTextCol)
     // DOC-partitioned postings (round 19, guide §2.4): hash the pruned
-    // read by idCol ONCE before the persist, and persist PRESERVING that
+    // read by idCol ONCE before the persist, which then PRESERVES that
     // layout. Every postings-volume step of batchSlotVerify clusters on
     // a key set containing idCol (the slot-verify join on (id, pos,
     // term), both aggregations), and HashPartitioning(id) satisfies each
@@ -276,11 +276,12 @@ object Search {
     // contract: AQE never re-coalesces a user-pinned N), conf-driven via
     // the session's shuffle parallelism, so the layout stays
     // cluster-configured rather than local-tuned.
-    val posted = org.apache.spark.sql.graftbridge.Bridge.persistedCopyPartitionedAutoRelease(
+    val posted = org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
       indexPostings(spark, table, idCol, terms)
         .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col(idCol)),
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    batchSlotVerify(posted, qt, queryIdCol, idCol)
+    posted.releaseAfterNextUse()
+    batchSlotVerify(posted.df, qt, queryIdCol, idCol)
   }
 
   /** Top-`topK` documents for a whitespace query, scored by BM25.

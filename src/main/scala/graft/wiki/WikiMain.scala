@@ -48,7 +48,7 @@ object WikiMain {
       System.err.println("Please include --infn FILENAME in your command.")
       sys.exit(1)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Tables.localCpus
     val spark: SparkSession = Tables.newSession("graft-wiki", s"local[$cpus]", cpus)
     val cfg = WikiPipeline.Config(keepLinks = keepLinks, structure = structure,
       incubator = incubator, vitalFn = vitalfn, expandTemplates = expandTemplates,

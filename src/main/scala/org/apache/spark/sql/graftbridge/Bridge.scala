@@ -13,153 +13,100 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A persisted copy of a frame (see [[persistedCopy]]): the copy
+    * itself, and the two ways to free its blocks before the frame is
+    * garbage-collected. The persistence lives on the raw internal-row RDD
+    * and is never registered in the CacheManager, so `df.unpersist()` is
+    * a silent no-op — callers that materialize a skeleton per batch in a
+    * long-lived driver free it through this handle, or dead blocks
+    * accumulate between GCs.
+    */
+  final class Persisted private[graftbridge] (
+      val df: org.apache.spark.sql.DataFrame,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      session: org.apache.spark.sql.classic.SparkSession) {
+
+    /** Free the blocks now. A later query over [[df]] recomputes them. */
+    def release(): Unit = rdd.unpersist(blocking = false)
+
+    /** Free the blocks after the first query that reads [[df]] completes
+      * (success or failure). Operators whose result the CALLER
+      * materializes arm this before returning: within that one action
+      * every branch shares the blocks, and a driver running the operator
+      * per batch accumulates nothing between GCs. Operators that run
+      * their own probe actions over [[df]] arm it AFTER the probes, so
+      * the probes fill the cache instead of consuming it. Lineage is
+      * kept, so a second action recomputes instead of failing. The
+      * listener holds only the RDD id: a frame that is armed but never
+      * read is still freed by the ContextCleaner when it is collected.
+      */
+    def releaseAfterNextUse(): Unit = armReleaseOnUse(session, rdd.id)
+  }
+
   /** A copy of `df` whose internal-row RDD is persisted at `level` —
     * the cluster-safe materialization primitive. Unlike `localCheckpoint`,
     * the RDD's lineage is KEPT: a block lost with its executor is
     * recomputed on access instead of failing the job. Unlike
     * `Dataset.persist`, nothing is registered in the session's
     * CacheManager — the blocks are freed by the ContextCleaner as soon as
-    * the returned frame is garbage-collected, so a library call can
-    * materialize an intermediate without leaking a session-lifetime cache
-    * entry. (Internal-row plumbing mirrors `Dataset.checkpoint`; rows are
+    * the returned frame is garbage-collected, or earlier through the
+    * handle. (Internal-row plumbing mirrors `Dataset.checkpoint`; rows are
     * copied because the scan reuses its row buffer.)
+    *
+    * Layout: when `df` is rooted at a hash `repartition(n, cols…)` with an
+    * explicit partition count, the copy declares that partitioning, so
+    * consumers whose required distribution it satisfies plan NO exchange
+    * over the cached frame. It is derived from the ANALYZED root rather
+    * than `LogicalRDD.fromDataset` (which reads the physical root's
+    * outputPartitioning — under lazily-built AQE that is Unknown), and
+    * only an explicit-N hash repartition qualifies: AQE never
+    * re-coalesces a user-pinned partition count, so declared == actual at
+    * runtime, and its partition expressions ARE the output attributes the
+    * copy exposes. (A range repartition's are sort orders and would claim
+    * a layout the rows do not have.) Every other copy is a bare leaf with
+    * fresh attributes and Unknown partitioning.
     */
   def persistedCopy(df: org.apache.spark.sql.DataFrame,
-                    level: org.apache.spark.storage.StorageLevel): org.apache.spark.sql.DataFrame =
-    persistedCopyReleasable(df, level)._1
-
-  /** [[persistedCopy]] plus an EFFECTIVE release thunk. Because the
-    * persistence lives on the raw internal-row RDD and is never
-    * registered in the CacheManager, `Dataset.unpersist()` on the
-    * returned frame is a silent no-op (uncacheQuery finds no cached
-    * plan) — the only way to free the blocks before the frame is GC'd
-    * is to unpersist the RDD itself, which this thunk holds. Callers
-    * that materialize a skeleton per batch in a long-lived driver MUST
-    * release through the thunk or dead blocks accumulate between GCs.
-    */
-  def persistedCopyReleasable(df: org.apache.spark.sql.DataFrame,
-                              level: org.apache.spark.storage.StorageLevel):
-      (org.apache.spark.sql.DataFrame, () => Unit) = {
+                    level: org.apache.spark.storage.StorageLevel): Persisted = {
     graft.plans.PlanTap.record("persistedCopy", df)
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val rdd = ds.queryExecution.toRdd.map(_.copy())
     rdd.persist(level)
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema),
-      () => { rdd.unpersist(blocking = false); () })
-  }
-
-  /** [[persistedCopy]] whose blocks are released AUTOMATICALLY after the
-    * first query that consumes the returned frame completes (success or
-    * failure): a one-shot [[org.apache.spark.sql.util.QueryExecutionListener]]
-    * watches for the frame's `LogicalRDD` leaf in each finished query's
-    * optimized plan, unpersists, and unregisters itself. This is the
-    * right primitive for lazy library operators whose result the CALLER
-    * materializes (the markCorpusFirst dedup family): within that one
-    * action every branch shares the persisted skeleton, and the blocks
-    * are freed the moment the action finishes — a long-lived driver
-    * running the operator per batch accumulates nothing between GCs.
-    * Lineage is kept, so a caller that runs a SECOND action on the same
-    * result recomputes the skeleton instead of failing — correct, just
-    * unshared (callers needing repeated consumption should persist the
-    * RESULT themselves). The ContextCleaner remains the backstop when no
-    * query ever runs (listener entries are a few fields each).
-    */
-  def persistedCopyAutoRelease(df: org.apache.spark.sql.DataFrame,
-                               level: org.apache.spark.storage.StorageLevel):
-      org.apache.spark.sql.DataFrame = {
-    graft.plans.PlanTap.record("persistedCopyAutoRelease", df)
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(level)
-    armReleaseOnUse(ds.sparkSession, rdd)
-    ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
-  }
-
-  /** [[persistedCopyAutoRelease]] that PRESERVES the input plan's output
-    * partitioning (and ordering) on the persisted leaf — `LogicalRDD.
-    * fromDataset`, the same attribute-rewriting capture `Dataset
-    * .checkpoint` uses — so consumers whose required distribution the
-    * layout already satisfies plan NO exchange over the cached frame
-    * (a bare `internalCreateDataFrame` leaf reports Unknown partitioning
-    * and every downstream join/aggregate re-shuffles it).
-    *
-    * Caller contract: the input's partitioning must be EXACT at runtime —
-    * i.e. the frame should be rooted at a `repartition(n, cols…)` with an
-    * explicit partition count, which AQE never re-coalesces. Preserving a
-    * partitioning that AQE could still change underneath would let a
-    * downstream join against OTHER data skip an exchange it actually
-    * needs. (Self-joins/aggregations over this same frame are safe either
-    * way — hash co-location within the frame is layout-stable.)
-    */
-  def persistedCopyPartitionedAutoRelease(df: org.apache.spark.sql.DataFrame,
-                                          level: org.apache.spark.storage.StorageLevel):
-      org.apache.spark.sql.DataFrame = {
-    graft.plans.PlanTap.record("persistedCopyPartitionedAutoRelease", df)
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(level)
-    armReleaseOnUse(ds.sparkSession, rdd)
-    // Derive the layout from the ANALYZED plan root rather than
-    // `LogicalRDD.fromDataset` (which reads the physical root's
-    // outputPartitioning — under lazily-built AQE that is
-    // UnknownPartitioning, so the capture silently degrades to the bare
-    // leaf). Only an explicit-N hash repartition qualifies: its
-    // partition expressions ARE the child's output attributes (the same
-    // attrs the new leaf exposes), and AQE never re-coalesces a
-    // user-pinned partition count, so declared == actual at runtime.
-    // LogicalRDD is a MultiInstanceRelation whose newInstance() rewrites
-    // the partitioning onto fresh attrs, so self-joins stay exchange-free.
-    val partitioning = ds.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
-          if r.optNumPartitions.isDefined &&
-            r.partitionExpressions.nonEmpty =>
-        org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-          r.partitionExpressions, r.optNumPartitions.get)
-      case _ =>
-        org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0)
-    }
-    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD(
-        ds.queryExecution.analyzed.output, rdd, partitioning)(ds.sparkSession))
-  }
-
-  /** [[persistedCopy]] plus a thunk that ARMS the release-on-first-use
-    * listener — for operators that must run a PROBE action over the
-    * persisted frame before handing it to the caller (the weighted-
-    * quantile recursion trigger): probe first (the probe's query finishes
-    * with no listener registered, so it FILLS the cache instead of
-    * consuming it), then arm; the first CALLER query that references the
-    * frame releases the blocks. An unarmed frame falls back to the
-    * ContextCleaner on GC, same as [[persistedCopy]].
-    */
-  def persistedCopyArmable(df: org.apache.spark.sql.DataFrame,
-                           level: org.apache.spark.storage.StorageLevel):
-      (org.apache.spark.sql.DataFrame, () => Unit) = {
-    graft.plans.PlanTap.record("persistedCopyArmable", df)
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(level)
     val session = ds.sparkSession
-    (session.internalCreateDataFrame(rdd, ds.schema),
-      () => armReleaseOnUse(session, rdd))
+    val copy = ds.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+          if r.optNumPartitions.isDefined && r.partitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] =>
+        // LogicalRDD is a MultiInstanceRelation whose newInstance()
+        // rewrites the partitioning onto fresh attrs, so self-joins stay
+        // exchange-free
+        org.apache.spark.sql.classic.Dataset.ofRows(session,
+          org.apache.spark.sql.execution.LogicalRDD(
+            r.output, rdd, r.partitioning)(session))
+      case _ => session.internalCreateDataFrame(rdd, ds.schema)
+    }
+    new Persisted(copy, rdd, session)
   }
 
+  // One-shot listener: the first finished query whose optimized plan
+  // reads the RDD frees its blocks and unregisters the listener. It keeps
+  // only the id — holding the RDD would pin an armed-but-unread frame's
+  // blocks for the session's lifetime — and unpersists the RDD that the
+  // consuming query's plan holds, which also clears its storage level so
+  // a later action recomputes without re-caching.
   private def armReleaseOnUse(
-      session: org.apache.spark.sql.classic.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): Unit = {
-    val rddId = rdd.id
+      session: org.apache.spark.sql.classic.SparkSession, rddId: Int): Unit = {
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-        val hit = qe.optimizedPlan.exists {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id == rddId
-          case _ => false
+      private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        qe.optimizedPlan.collectFirst {
+          case l: org.apache.spark.sql.execution.LogicalRDD if l.rdd.id == rddId => l.rdd
+        }.foreach { rdd =>
+          if (fired.compareAndSet(false, true)) {
+            rdd.unpersist(blocking = false)
+            session.listenerManager.unregister(this)
+          }
         }
-        if (hit && fired.compareAndSet(false, true)) {
-          rdd.unpersist(blocking = false)
-          session.listenerManager.unregister(this)
-        }
-      }
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit = maybeRelease(qe)

@@ -109,6 +109,59 @@ class OperatorSpec extends SparkSpec {
     assert(leaked.isEmpty, s"skeleton persist leaked rdd ids: $leaked")
   }
 
+  test("an armed persisted copy that is never read is freed once dropped") {
+    // the release-after-next-use listener keeps only the RDD id: a frame
+    // armed and then dropped unread falls back to the ContextCleaner
+    // instead of pinning its blocks for the session's lifetime
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def armAndDrop(): Unit =
+      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(
+        spark.range(100).toDF("x"),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .releaseAfterNextUse()
+    armAndDrop()
+    // ids only: a key-set VIEW of getPersistentRDDs would itself hold
+    // the RDDs strongly
+    def leaked = spark.sparkContext.getPersistentRDDs.keysIterator
+      .filterNot(before).toSet
+    val armed = leaked.size
+    assert(armed == 1)
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (leaked.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(50)
+    }
+    assert(leaked.isEmpty, s"armed persisted copy pinned rdd ids: $leaked")
+  }
+
+  test("a persisted copy declares only an explicit-N hash layout") {
+    // hash repartition(n, col): the copy keeps the layout, so a groupBy
+    // on col plans no exchange over it. Range repartition(n, col): its
+    // partition expressions are sort orders, so the copy declares
+    // nothing and the groupBy still shuffles.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.storage.StorageLevel
+    val df = spark.range(1000).select((col("id") % 7).as("k"), col("id"))
+    def exchanges(in: org.apache.spark.sql.DataFrame): Int = {
+      val persisted = Bridge.persistedCopy(in, StorageLevel.MEMORY_AND_DISK)
+      try persisted.df.groupBy("k").count().queryExecution.executedPlan
+        .collect { case s: ShuffleExchangeExec => s }.size
+      finally persisted.release()
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(exchanges(df.repartition(4, col("k"))) == 0)
+      assert(exchanges(df.repartitionByRange(4, col("k"))) == 1)
+      val ranged = Bridge.persistedCopy(df.repartitionByRange(4, col("k")),
+        StorageLevel.MEMORY_AND_DISK)
+      try assert(ranged.df.queryExecution.executedPlan.outputPartitioning
+        .isInstanceOf[UnknownPartitioning])
+      finally ranged.release()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("decontaminateSpans removes exactly the spans a benchmark gram overlaps") {
     val bench = Seq((100L, "q1 q2 q3 q4"), (101L, "s1 s2")).toDF("doc_id", "text")
     val corpus = Seq(

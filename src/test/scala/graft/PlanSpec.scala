@@ -869,21 +869,29 @@ class PlanSpec extends SparkSpec {
     "broadcasts") {
     // the t31/s04 batched-serving discipline applied to phrases: if a
     // refactor dropped the persist, each phrase's verify join would
-    // rescan documents — at 100 TB, |phrases|+1 corpus scans
+    // rescan documents — at 100 TB, |phrases|+1 corpus scans. t59 is
+    // the same batch served from the phrase index.
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = SparkEntry.queries("t57_phrase_batch")(spark, sf)
+    try for (q <- Seq("t57_phrase_batch", "t59_phrase_indexed_batch")) {
+      val plan = SparkEntry.queries(q)(spark, sf)
         .queryExecution.executedPlan
       val parquetScans = plan.collect { case f: FileSourceScanExec => f }
       assert(parquetScans.isEmpty,
-        s"t57: downstream steps rescan parquet (${parquetScans.size}):\n$plan")
+        s"$q: downstream steps rescan parquet (${parquetScans.size}):\n$plan")
       // the shared postings surface as the materialized frame (the
       // persist cut its lineage — same signature as the funnel's)
       assert(plan.toString.contains("Scan ExistingRDD"),
-        s"t57: expected the shared persisted postings in the plan:\n$plan")
+        s"$q: expected the shared persisted postings in the plan:\n$plan")
       assert(plan.toString.contains("BroadcastHashJoin"),
-        s"t57: anchors/slots should broadcast, not shuffle:\n$plan")
+        s"$q: anchors/slots should broadcast, not shuffle:\n$plan")
+      // the postings persist keeps its doc-id hash layout, so the slot
+      // verify join and the candidate aggregation add no postings
+      // exchange of their own; a lost layout brings theirs back
+      val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
+      assert(shuffles.size == 5,
+        s"$q: expected 5 exchanges, got ${shuffles.size}:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
