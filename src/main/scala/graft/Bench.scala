@@ -129,16 +129,15 @@ object Bench {
     val tiers = results.filter(_._2._1 >= 0)
       .groupBy(_._1.head).toSeq.sortBy(_._1)
       .map { case (t, rs) => f""""tier_$t":${rs.map(_._2._1).sum}%.2f""" }
-    val tail = tiers.mkString(",", ",", "") + "}" + lf +
-      s""","sf":"$sfName"}"""
-    val fixed = header.length + tail.length
+    val tail = "}" + lf + s""","sf":"$sfName"}"""
+    val fixed = header.length + tiers.map(_.length + 1).sum + tail.length
     val entries = scala.collection.mutable.ArrayBuffer[String]()
     var used = fixed
     for ((k, (w, _)) <- results.filter(_._2._1 >= 0).sortBy(-_._2._1)) {
       val e = f""""$k":$w%.3f"""
       if (used + e.length + 1 <= budget) { entries += e; used += e.length + 1 }
     }
-    val compact = header + entries.sorted.mkString(",") + tail
+    val compact = header + (entries.sorted ++ tiers).mkString(",") + tail
     sys.env.get("SPARK_GRAFT_DETAIL_OUT").foreach { p =>
       val body = results.map { case (k, (w, c)) =>
         f""""$k":{"wall_s":$w%.3f,"cpu_s":$c%.3f}"""

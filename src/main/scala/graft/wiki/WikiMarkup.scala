@@ -47,25 +47,17 @@ object WikiMarkup {
   val placeholderTags: Seq[(String, String)] = Seq("math" -> "formula", "code" -> "codice")
 
   // --- compiled patterns (thread-safe; Matchers are per-call) ---
-  private val comment = Pattern.compile("<!--.*?-->", Pattern.DOTALL)
-  private val selfClosingPats: Seq[Pattern] = selfClosingTags.map(t =>
-    Pattern.compile(s"<\\s*$t\\b[^/]*/\\s*>", Pattern.DOTALL | Pattern.CASE_INSENSITIVE))
-  private def ignoredPats(keepLinks: Boolean): Seq[(Pattern, Pattern)] = {
-    val tags = if (keepLinks) ignoredTags else ignoredTags :+ "a"
-    tags.map(t => (
-      Pattern.compile(s"<\\s*$t\\b[^>]*>", Pattern.CASE_INSENSITIVE),
-      Pattern.compile(s"<\\s*/\\s*$t>", Pattern.CASE_INSENSITIVE)))
-  }
-  private val ignoredPatsKeep = ignoredPats(keepLinks = true)
-  private val ignoredPatsNoKeep = ignoredPats(keepLinks = false)
-  private val discardPats: Seq[Pattern] = discardElements.map(t =>
-    Pattern.compile(s"<\\s*$t\\b[^>]*>.*?<\\s*/\\s*$t>", Pattern.DOTALL | Pattern.CASE_INSENSITIVE))
-  private val placeholderPats: Seq[(Pattern, String)] = placeholderTags.map { case (t, repl) =>
-    (Pattern.compile(s"<\\s*$t(\\s*| [^>]+?)>.*?<\\s*/\\s*$t\\s*>",
+  private val templateOpen = Pattern.compile("\\{\\{")
+  private val templateClose = Pattern.compile("\\}\\}")
+  private val tableOpen = Pattern.compile("\\{\\|")
+  private val tableClose = Pattern.compile("\\|\\}")
+  private val discardPats: Seq[(String, Pattern)] = discardElements.map(t => (t,
+    Pattern.compile(s"<\\s*$t\\b[^>]*>.*?<\\s*/\\s*$t>", Pattern.DOTALL | Pattern.CASE_INSENSITIVE)))
+  private val placeholderPats: Seq[(String, Pattern, String)] = placeholderTags.map { case (t, repl) =>
+    (t, Pattern.compile(s"<\\s*$t(\\s*| [^>]+?)>.*?<\\s*/\\s*$t\\s*>",
       Pattern.DOTALL | Pattern.CASE_INSENSITIVE), repl)
   }
   private val preformatted = Pattern.compile("^ .*?$", Pattern.MULTILINE)
-  private val externalLink = new Regex("\\[\\w+.*? (.*?)\\]")
   private val externalLinkNoAnchor = Pattern.compile("\\[\\w+[&\\]]*\\]")
   private val boldItalic = new Regex("'''''([^']*?)'''''")
   private val bold = new Regex("'''(.*?)'''")
@@ -131,9 +123,10 @@ object WikiMarkup {
     * open left unclosed at EOF is kept unless some close appeared after it,
     * in which case everything up to the last close is dropped.
     */
-  def dropNested(text: String, open: String, close: String): String = {
-    val openRe = Pattern.compile(open)
-    val closeRe = Pattern.compile(close)
+  def dropNested(text: String, open: String, close: String): String =
+    dropNested(text, Pattern.compile(open), Pattern.compile(close))
+
+  private def dropNested(text: String, openRe: Pattern, closeRe: Pattern): String = {
     val om = openRe.matcher(text)
     val cm = closeRe.matcher(text)
     val spans = mutable.ArrayBuffer.empty[(Int, Int)]
@@ -191,19 +184,244 @@ object WikiMarkup {
   private def patSub(p: Pattern, text: String, repl: String): String =
     p.matcher(text).replaceAll(repl)
 
-  /** Full markup → text cleaning (WikiExtractor.py:368-456), same step
-    * order as the reference. `namespaces` governs which `[[Ns:...]]` links
-    * survive link expansion (threaded from the pipeline config so a
-    * configured namespace set applies end to end, not just to page
-    * filtering).
+  /** ASCII `[A-Za-z0-9]`: the characters of every tag name. */
+  private def isAsciiAlnum(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
+
+  /** Java regex `\s` without UNICODE_CHARACTER_CLASS: ASCII whitespace only. */
+  private def isRegexSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
+
+  /** The characters Java regex `.` does not match without DOTALL. */
+  private def isLineTerminator(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
+
+  private def skipSpaces(text: String, from: Int): Int = {
+    var i = from
+    while (i < text.length && isRegexSpace(text.charAt(i))) i += 1
+    i
+  }
+
+  private def skipAsciiAlnum(text: String, from: Int): Int = {
+    var i = from
+    while (i < text.length && isAsciiAlnum(text.charAt(i))) i += 1
+    i
+  }
+
+  /** Whether `name` (lower-case ASCII) starts at `at`, ASCII case folded as
+    * CASE_INSENSITIVE does without UNICODE_CASE.
+    */
+  private def startsWithName(text: String, at: Int, name: String): Boolean = {
+    if (at + name.length > text.length) return false
+    var i = 0
+    while (i < name.length) {
+      val c = text.charAt(at + i)
+      if (!isAsciiAlnum(c) || (c | 0x20).toChar != name.charAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Index of the name in `names` that is exactly `text[at, at + len)`. */
+  private def nameIndex(names: Array[String], text: String, at: Int, len: Int): Int = {
+    var k = 0
+    while (k < names.length) {
+      if (names(k).length == len && startsWithName(text, at, names(k))) return k
+      k += 1
+    }
+    -1
+  }
+
+  /** Java 17 regex `\b` right after a tag name: the next code point is not a
+    * word character, which here means `Character.isLetterOrDigit`, `_`, or a
+    * non-spacing mark (its base is the name's last letter). So neither `<bé>`
+    * nor `<b` + U+0301 opens `b`.
+    */
+  private def wordBoundaryAfterName(text: String, at: Int): Boolean =
+    at >= text.length || {
+      val cp = text.codePointAt(at)
+      !(cp == '_' || Character.isLetterOrDigit(cp) ||
+        Character.getType(cp) == Character.NON_SPACING_MARK)
+    }
+
+  private val selfClosingNames: Array[String] = selfClosingTags.toArray
+  private val ignoredNamesKeep: Array[String] = ignoredTags.toArray
+  private val ignoredNamesNoKeep: Array[String] = (ignoredTags :+ "a").toArray
+
+  /** Drops comments, self-closing tags and ignored open/close tags in one
+    * pass over the `<` positions, with exactly the result of collecting
+    * the matches of `<!--.*?-->` (DOTALL), of `<\s*t\b[^/]*` + `/\s*>`
+    * per self-closing `t`, and of `<\s*t\b[^>]*>` then `<\s*` + `/\s*t>`
+    * per ignored `t` (all CASE_INSENSITIVE), each pattern by its own
+    * `find()` loop, then sorting the spans stably by start and applying
+    * `dropSpans`.
+    *
+    * At one `<` at most one of those patterns can match (a `\b`-bounded
+    * name is the whole ASCII-alnum run after `<\s*`, the names are
+    * distinct, and comment/close/open start differently), so spans come
+    * out already in sorted order and are dropped as they are found. Each
+    * pattern keeps its own resume point, as `find()` does: a match counts
+    * only at or after the end of that pattern's previous match.
+    */
+  private def dropTags(text: String, keepLinks: Boolean): String = {
+    var p = text.indexOf('<')
+    if (p < 0) return text
+    val n = text.length
+    val ignored = if (keepLinks) ignoredNamesKeep else ignoredNamesNoKeep
+    // pattern ids: 0 comment, 1 + i self-closing i, 1 + nSelf + 2j / +1 ignored j open/close
+    val nSelf = selfClosingNames.length
+    val resume = new Array[Int](1 + nSelf + 2 * ignored.length)
+    // first '>', '/' and "-->" at or after the last search start; searches
+    // start at increasing offsets, so each is found once per occurrence
+    var gt = -1
+    var slash = -1
+    var commentEnd = -1
+    var sb: java.lang.StringBuilder = null
+    var cur = 0
+    while (p >= 0) {
+      var id = -1
+      var end = -1
+      if (text.startsWith("<!--", p)) {
+        if (commentEnd < p + 4) {
+          val i = text.indexOf("-->", p + 4)
+          commentEnd = if (i < 0) n else i
+        }
+        if (commentEnd < n) { id = 0; end = commentEnd + 3 }
+      } else {
+        val q = skipSpaces(text, p + 1)
+        if (q < n && text.charAt(q) == '/') {
+          val r = skipSpaces(text, q + 1)
+          val e = skipAsciiAlnum(text, r)
+          if (e < n && text.charAt(e) == '>') {
+            val j = nameIndex(ignored, text, r, e - r)
+            if (j >= 0) { id = 2 + nSelf + 2 * j; end = e + 1 }
+          }
+        } else {
+          val e = skipAsciiAlnum(text, q)
+          if (e > q && wordBoundaryAfterName(text, e)) {
+            val i = nameIndex(selfClosingNames, text, q, e - q)
+            if (i >= 0) {
+              if (slash < e) {
+                val s = text.indexOf('/', e)
+                slash = if (s < 0) n else s
+              }
+              if (slash < n) {
+                val close = skipSpaces(text, slash + 1)
+                if (close < n && text.charAt(close) == '>') { id = 1 + i; end = close + 1 }
+              }
+            } else {
+              val j = nameIndex(ignored, text, q, e - q)
+              if (j >= 0) {
+                if (gt < e) {
+                  val g = text.indexOf('>', e)
+                  gt = if (g < 0) n else g
+                }
+                if (gt < n) { id = 1 + nSelf + 2 * j; end = gt + 1 }
+              }
+            }
+          }
+        }
+      }
+      if (id >= 0 && p >= resume(id)) {
+        resume(id) = end
+        if (sb == null) sb = new java.lang.StringBuilder(n)
+        if (p > cur) sb.append(text, cur, p)
+        cur = end // dropSpans: the cursor moves to each span's end, even backwards
+      }
+      p = text.indexOf('<', p + 1)
+    }
+    if (sb == null) text
+    else {
+      if (cur < n) sb.append(text, cur, n)
+      sb.toString
+    }
+  }
+
+  /** Whether the text holds `<`, ASCII whitespace, then `name` (ASCII case
+    * folded): the prefix every match of that element's pattern starts with.
+    */
+  private def holdsElement(text: String, name: String): Boolean = {
+    var p = text.indexOf('<')
+    while (p >= 0) {
+      if (startsWithName(text, skipSpaces(text, p + 1), name)) return true
+      p = text.indexOf('<', p + 1)
+    }
+    false
+  }
+
+  /** `\[\w+.*? (.*?)\]` replaced by its group, as a linear scan: after `[`
+    * an ASCII `\w` character, then the first space, then the first `]`
+    * after it, neither past a line terminator (`.` stops there). The
+    * group is the text between that space and that `]`.
+    */
+  private def expandExternalLinks(text: String): String = {
+    var p = text.indexOf('[')
+    if (p < 0) return text
+    val n = text.length
+    // first space-or-terminator and first ']'-or-terminator at or after the
+    // last search start (n: none); search starts only increase
+    var space = -1
+    var bracket = -1
+    def firstOf(c: Char, from: Int): Int = {
+      var i = from
+      while (i < n && text.charAt(i) != c && !isLineTerminator(text.charAt(i))) i += 1
+      i
+    }
+    var sb: java.lang.StringBuilder = null
+    var cur = 0
+    while (p >= 0) {
+      var next = p + 1
+      if (p + 1 < n && { val c = text.charAt(p + 1); c == '_' || isAsciiAlnum(c) }) {
+        if (space < p + 1) space = firstOf(' ', p + 1)
+        if (space < n && text.charAt(space) == ' ') {
+          if (bracket < space + 1) bracket = firstOf(']', space + 1)
+          if (bracket < n && text.charAt(bracket) == ']') {
+            if (sb == null) sb = new java.lang.StringBuilder(n)
+            sb.append(text, cur, p).append(text, space + 1, bracket)
+            cur = bracket + 1
+            next = cur
+          }
+        }
+      }
+      p = text.indexOf('[', next)
+    }
+    if (sb == null) text
+    else sb.append(text, cur, n).toString
+  }
+
+  /** Full markup → text cleaning (WikiExtractor.py:368-456). `namespaces`
+    * governs which `[[Ns:...]]` links survive link expansion (threaded
+    * from the pipeline config so a configured namespace set applies end
+    * to end, not just to page filtering).
+    *
+    * The contract is the reference's step order and its regexes' Java 17
+    * semantics; three steps are hand scans that give the same bytes as the
+    * regex passes they replace (the regex form is kept as a test oracle):
+    *  1. `{{..}}`, then `{|..|}` (dropNested); wiki links; other `[[..]]`;
+    *  1. external links: a linear scan for `\[\w+.*? (.*?)\]`, then
+    *     `\[\w+[&\]]*\]` as a regex;
+    *  1. bold/italic/quotes; `unescape` twice;
+    *  1. comments, self-closing and ignored tags: one pass over the `<`
+    *     positions yielding the span list of the per-pattern `find()`
+    *     loops (comment, self-closing tags, then each ignored tag's open
+    *     and close pattern; each pattern resumes after its own previous
+    *     match), stably sorted by start and dropped with `dropSpans`;
+    *  1. discarded elements, then `math`/`code` placeholders: each regex
+    *     runs only when the current text holds `<`, ASCII whitespace and
+    *     the element name, so a name joined by an earlier removal counts;
+    *  1. guillemets, preformatted lines, final whitespace/punctuation.
+    * Regex semantics kept by the scans: `\s` and case folding are ASCII
+    * only; `\b` after a tag name treats `Character.isLetterOrDigit`, `_`
+    * and non-spacing marks as word characters; `[^>]*` and `[^/]*` cross
+    * newlines; `.` stops at `\n`, `\r`, `\u0085`, `\u2028`, `\u2029`.
     */
   def clean(text0: String, keepLinks: Boolean = false,
             namespaces: Set[String] = acceptedNamespaces): String = {
     var text = text0
 
     // Transclusions + tables (nesting-aware).
-    text = dropNested(text, "\\{\\{", "\\}\\}")
-    text = dropNested(text, "\\{\\|", "\\|\\}")
+    text = dropNested(text, templateOpen, templateClose)
+    text = dropNested(text, tableOpen, tableClose)
 
     // Links: expand innermost in one pass, then drop remaining enclosing.
     text = wikiLink.replaceAllIn(text, m =>
@@ -212,7 +430,7 @@ object WikiMarkup {
     text = patSub(parametrizedLink, text, "")
 
     // External links.
-    text = externalLink.replaceAllIn(text, m => Regex.quoteReplacement(m.group(1)))
+    text = expandExternalLinks(text)
     text = patSub(externalLinkNoAnchor, text, "")
 
     // Bold / italic / quotes.
@@ -227,26 +445,18 @@ object WikiMarkup {
     text = unescape(text)
     text = unescape(text)
 
-    // Comments + self-closing + ignored tags: collected as spans and bulk
-    // dropped, mirroring the reference's dropSpans pass.
-    val spans = mutable.ArrayBuffer.empty[(Int, Int)]
-    def collect(p: Pattern): Unit = {
-      val m = p.matcher(text)
-      while (m.find()) spans += ((m.start, m.end))
-    }
-    collect(comment)
-    selfClosingPats.foreach(collect)
-    val ign = if (keepLinks) ignoredPatsKeep else ignoredPatsNoKeep
-    ign.foreach { case (l, r) => collect(l); collect(r) }
-    text = dropSpans(spans.sortBy(_._1).toSeq, text)
+    // Comments + self-closing + ignored tags, as the reference's dropSpans pass.
+    text = dropTags(text, keepLinks)
 
-    // Discarded elements (may nest → per-pattern regex sub).
-    for (p <- discardPats) text = patSub(p, text, "")
+    // Discarded elements (may nest → per-pattern regex sub), each run only
+    // when the current text can hold a match: an earlier removal can join
+    // `<re` and `f>` into `<ref>`.
+    for ((tag, p) <- discardPats) if (holdsElement(text, tag)) text = patSub(p, text, "")
 
     // Placeholders: indices assigned from matches over the pre-replacement
     // text; replacement is by exact string value (reference quirk — two
     // identical elements collapse to the first index).
-    for ((p, repl) <- placeholderPats) {
+    for ((tag, p, repl) <- placeholderPats) if (holdsElement(text, tag)) {
       val m = p.matcher(text)
       val found = mutable.ArrayBuffer.empty[String]
       while (m.find()) found += m.group()
@@ -1020,10 +1230,8 @@ object WikiMarkup {
     // words ({{lc:…}}) evaluate even with an empty template library, so
     // the old `empty lib && no {{#` shortcut would skip them
     if (text.indexOf("{{") < 0) return text
-    val openRe = Pattern.compile("\\{\\{")
-    val closeRe = Pattern.compile("\\}\\}")
-    val om = openRe.matcher(text)
-    val cm = closeRe.matcher(text)
+    val om = templateOpen.matcher(text)
+    val cm = templateClose.matcher(text)
     // top-level spans, same scan discipline as dropNested
     val spans = mutable.ArrayBuffer.empty[(Int, Int)]
     val stack = mutable.ArrayBuffer.empty[Int]

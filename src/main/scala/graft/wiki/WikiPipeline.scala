@@ -155,11 +155,13 @@ object WikiPipeline {
     // EVALUATE inside expandTemplates, so reaching it with an empty map is
     // no longer behavior-neutral)
     val doExpand = cfg.expandTemplates || templates.nonEmpty
-    val bcTemplates = articles.sparkSession.sparkContext.broadcast(templates)
+    val bcTemplates =
+      if (doExpand) Some(articles.sparkSession.sparkContext.broadcast(templates)) else None
     val extractUdf = udf { (text: String) =>
-      val expanded =
-        if (doExpand) WikiMarkup.expandTemplates(text, bcTemplates.value, levels)
-        else text
+      val expanded = bcTemplates match {
+        case Some(bc) => WikiMarkup.expandTemplates(text, bc.value, levels)
+        case None => text
+      }
       WikiMarkup.compact(WikiMarkup.clean(expanded, keepLinks, ns), structure)
     }
     articles.toDF()

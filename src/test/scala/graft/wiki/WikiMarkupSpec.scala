@@ -53,6 +53,37 @@ class WikiMarkupSpec extends AnyFunSuite {
         s"\ninput: ${c.get("input")}")
   }
 
+  test("clean: \\b after a tag name is Java 17's Unicode word boundary") {
+    // letters, digits, '_' and non-spacing marks (any script) continue the name
+    assert(WikiMarkup.clean("x<bé>y</b>z") == "x<bé>yz")
+    assert(WikiMarkup.clean("x<b\u0301>y") == "x<b\u0301>y")
+    assert(WikiMarkup.clean("x<b\ud835\udc00>y") == "x<b\ud835\udc00>y")
+    assert(WikiMarkup.clean("x<b_>y") == "x<b_>y")
+    assert(WikiMarkup.clean("x<b->y") == "xy")
+  }
+
+  test("clean: tag whitespace and case folding are ASCII only") {
+    assert(WikiMarkup.clean("x<\u000bb>y") == "xy")
+    assert(WikiMarkup.clean("x<\u00a0b>y") == "x<\u00a0b>y")
+    assert(WikiMarkup.clean("a<B >b</ B>c< / sup>d") == "abcd")
+    assert(WikiMarkup.clean("x<\u212Abd>y</kbd>z") == "x<\u212Abd>yz") // Kelvin sign is not K
+    assert(WikiMarkup.clean("x<\u017fpan>y") == "x<\u017fpan>y")    // long s is not s
+  }
+
+  test("clean: external links stop at the line terminators of regex '.'") {
+    for (t <- Seq("\n", "\r", "\u0085", "\u2028", "\u2029"))
+      assert(WikiMarkup.clean(s"[w a${t}b]") == s"[w a${t}b]", s"terminator ${t.head.toInt}")
+    assert(WikiMarkup.clean("[w a\u000bb]") == "a\u000bb")
+    assert(WikiMarkup.clean("[w a]]") == "a]")
+    assert(WikiMarkup.clean("[w]x y]") == "y")
+    assert(WikiMarkup.clean("[x]") == "")
+  }
+
+  test("clean: a discarded element joined by an earlier removal is discarded") {
+    // removing <li>..</li> joins `<re` and `f>` into `<ref>`
+    assert(WikiMarkup.clean("<re<li>x</li>f>y</ref>z") == "z")
+  }
+
   test("keepLinks=true preserves anchors as <a> tags") {
     val out = WikiMarkup.clean("See [[Target|anchor]]s here", keepLinks = true)
     assert(out == "See <a href=\"Target\">anchors</a> here")
