@@ -41,7 +41,7 @@ object Bench {
     val cpus = Tables.localCpus
     // optional comma-separated query-name filter for targeted runs
     // (e.g. timing one operator at a larger SF without the full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark: SparkSession = Tables.newSession("graft-bench", s"local[$cpus]", cpus)
 
     val cpuNs = new java.util.concurrent.atomic.AtomicLong()
@@ -55,9 +55,7 @@ object Bench {
         }
       })
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val (wall, cpu) =
         try {
           fn(spark, sfDir).count() // warmup: plan + codegen + IO caches

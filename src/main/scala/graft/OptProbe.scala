@@ -11,18 +11,17 @@ import scala.collection.mutable
   * guessed from the query total. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.OptProbe g02_hits g01_pagerank"
+  *
+  * A Spark conf that `Tables.newSession` does not set reaches the probe as
+  * a system property of the forked JVM, e.g.
+  * `sbt 'set run / javaOptions += "-Dspark.sql.autoBroadcastJoinThreshold=-1"' "runMain graft.OptProbe q05_star_join"`.
+  * A key the session builder sets (AQE, shuffle partitions, ...) is
+  * overridden by the builder and needs a source change.
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Tables.localCpus
-    // ad-hoc conf overrides for isolation experiments, e.g.
-    // SPARK_GRAFT_PROBE_CONF="spark.sql.adaptive.enabled=false;k=v"
-    // (system properties so static/core confs are honored at context init)
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      System.setProperty(k, v)
-    })
     val spark = Tables.newSession("graft-optprobe", s"local[$cpus]", cpus)
 
     case class Job(var tasks: Int = 0, var cpuNs: Long = 0L,

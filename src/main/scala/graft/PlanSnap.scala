@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
   * `plans/<round>/<query>_<tag>.txt` with the formatted physical plan
   * plus every pre-barrier plan recorded by [[graft.plans.PlanTap]]
   * (materialization barriers otherwise hide the interesting stages, the
-  * PlanDump rationale). Usage:
+  * rationale of PlanDump, since deleted). Usage:
   *
   *   sbt "runMain graft.PlanSnap r18 before g02_hits q24_weighted_quantile"
   *

@@ -11,7 +11,8 @@ import graft.dedup.Dedup
   * removal verdict rides the shared salted corpus-first middle
   * (removedWindowStarts/markCorpusFirst), so no task anywhere reads a
   * partition that scales with the hot phrase's containing-doc count —
-  * the same structural claim LineDedupBench pins for d18, asserted here
+  * the same structural claim LineDedupBench (since deleted; an
+  * OperatorSpec hot-line test now) pins for d18, asserted here
   * for the d20 path end-to-end (including the segment-statistics fold,
   * which must stay row-local).
   *

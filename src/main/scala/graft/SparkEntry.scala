@@ -28,6 +28,25 @@ object SparkEntry {
       graft.queries.PipelineQ.queries ++
       graft.queries.GraphQ.queries
 
+  /** The queries a comma-separated filter of full names selects
+    * (`SPARK_GRAFT_ONLY` in [[Bench]] and [[Verify]]); no filter selects
+    * every query. A name that matches no query fails the call, so a typo
+    * or a short name (`q01` for `q01_agg`) cannot turn a run into a
+    * no-op that exits 0.
+    */
+  def selectQueries(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { spec =>
+      val all = queries
+      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- all.keySet
+      require(names.nonEmpty && unknown.isEmpty,
+        "SPARK_GRAFT_ONLY names no query: " +
+          (if (names.isEmpty) "(empty)" else unknown.toSeq.sorted.mkString(", ")) +
+          " (full names are expected, e.g. q01_agg)")
+      all.filter { case (name, _) => names(name) }
+    }
+
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracles ++
       graft.queries.Events.oracles ++

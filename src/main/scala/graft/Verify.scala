@@ -5,23 +5,22 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = Tables.localCpus
-    val spark = Tables.newSession("graft-verify", s"local[$cpus]", cpus)
-    new java.io.File(outDir).mkdirs()
     // Key oracle trained-state exports by this run's outdir so dumping two
     // scale factors before one compare pass can't clobber each other's
     // state (and /tmp isn't shared with other local users). Must be set
-    // BOTH before queries run (writes) and before oracleSql renders
-    // (reads) — both happen below in this JVM.
+    // before anything touches SparkEntry: the query objects render their
+    // oracle SQL (the reads) when they initialize, and the queries write
+    // the exports when they run.
     sys.props("graft.oracle.exportRoot") =
       new java.io.File(outDir, "oracle_export").getAbsolutePath
     // optional comma-separated filter for targeted re-runs (e.g. gating one
-    // new query at sf1 without regenerating 70 dumps); the driver sets no
-    // filter and always dumps everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // new query at sf1 without regenerating 70 dumps); the oracle gate
+    // sets no filter and dumps everything
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val cpus = Tables.localCpus
+    val spark = Tables.newSession("graft-verify", s"local[$cpus]", cpus)
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

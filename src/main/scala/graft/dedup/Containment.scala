@@ -132,14 +132,11 @@ object Containment {
   }
 
   /** The distinct-set skeleton `(__id, __arr, __na)` the join stages run
-    * over — exposed for [[containmentPairsFromSets]] and the bench
-    * harness (ContainBench instruments candidate counts and verify-join
-    * volume on exactly the production stages, never a re-implementation).
+    * over; [[containmentPairsFromSets]] drops empty sets above its
+    * persist barrier. ContainBench (since deleted) instrumented candidate
+    * counts and verify-join volume on exactly these production stages,
+    * never a re-implementation.
     */
-  private[graft] def setsFrame(df: DataFrame, setCol: String,
-                               idCol: String): DataFrame =
-    setsFrameUnfiltered(df, setCol, idCol).filter(col("__na") >= 1)
-
   private[graft] def setsFrameUnfiltered(df: DataFrame, setCol: String,
                                          idCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
@@ -147,7 +144,7 @@ object Containment {
       .withColumn("__na", size(col("__arr")))
 
   /** Candidate (\_\_a, \_\_b) pairs — the prefix-filter (or naive) stage
-    * shared by the production join and the bench.
+    * of the production join.
     */
   private[graft] def candidatePairs(arr: DataFrame, tauPct: Int,
                                     minElems: Int,

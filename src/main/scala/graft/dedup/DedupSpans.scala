@@ -33,8 +33,9 @@ private[graft] trait DedupSpans { this: Dedup.type =>
     * applied to an associative min; (3) the winner joins back on the
     * COMPOSITE (key, id, pos) — a hot key's rows carry distinct ids, so
     * the join's hash partitioning spreads them uniformly. No partition
-    * anywhere scales with a key's document count (LineDedupBench pins
-    * the per-task bound with a line planted in every document). Join
+    * anywhere scales with a key's document count (LineDedupBench, since
+    * deleted, measured the per-task bound with a line planted in every
+    * document; an OperatorSpec hot-line test now pins it). Join
     * keys are null-SAFE (`<=>`) so d18's per-occurrence blank-line key
     * (null on content lines) matches itself.
     *

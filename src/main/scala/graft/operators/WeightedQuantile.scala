@@ -73,7 +73,8 @@ object WeightedQuantile {
     // stats/thresh are one-row-per-group skeletons: BROADCAST them — a
     // hash join on a 3-value group key would shuffle every (group,
     // value) row onto 3 tasks, the exact funnel the histogram pass
-    // exists to avoid (caught by ScaleBench max-task, not by eyesight)
+    // exists to avoid (caught by ScaleBench max-task, not by eyesight;
+    // ScaleBench since deleted)
     //
     // the binned (group, value, weight, bin) collapse is the only
     // corpus-sized frame and EVERY downstream stage of every ppm reads

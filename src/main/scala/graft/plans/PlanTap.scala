@@ -7,12 +7,13 @@ import org.apache.spark.sql.DataFrame
   * lineage, so a query's `explain` shows only the post-barrier tail — a
   * recorded plan for d24's containment join was just the final sort, the
   * real join shape invisible to any audit. When tapping is enabled (only
-  * [[graft.PlanDump]] does), the shared materialization helpers
+  * [[graft.PlanSnap]] does; PlanDump, since deleted, did too), the
+  * shared materialization helpers
   * ([[graft.pipeline.Materialize.cut]]/`cutEager`, the
   * `Bridge.persistedCopy`) record the FULL formatted plan of every
-  * frame they are about to cut, tagged by call site; PlanDump drains the
+  * frame they are about to cut, tagged by call site; PlanSnap drains the
   * buffer after each query and appends the pre-barrier plans under the
-  * query's section.
+  * query's plan.
   *
   * Off by default and zero-cost when off (one atomic read per barrier):
   * `explainString` forces analysis+planning of the tapped frame, which

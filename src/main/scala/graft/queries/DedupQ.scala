@@ -455,7 +455,8 @@ object DedupQ {
     // join while unrelated documents survive. Rows-only: the survivor
     // set needs 64-bit SimHash + bit_count clustering (d03's
     // DuckDB-inexpressibility argument); the radius/chain/recall
-    // semantics are spec- and bench-gated (HammingBench) instead.
+    // semantics are spec- and bench-gated (HammingBench, since deleted)
+    // instead.
     "d14_simhash_near_dedup" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
       val twins = docs.filter(col("doc_id") % 10 === 0)

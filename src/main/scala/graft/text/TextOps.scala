@@ -108,9 +108,9 @@ object TextOps {
     * higher-order stopword filters evaluate interpreted and cost ~60×
     * the one tokenization pass of real work (the documented reason the
     * fused kernel exists; the two are spec-pinned vote-identical, and
-    * ScaleBench measured the expression form at 204 s vs ~3 s fused for
-    * 175k lines) — then ONE per-document window (lag + running sum —
-    * partitioned on the doc id, never a hot key) and a partial-agg
+    * ScaleBench, since deleted, measured the expression form at 204 s vs
+    * ~3 s fused for 175k lines) — then ONE per-document window (lag +
+    * running sum — partitioned on the doc id, never a hot key) and a partial-agg
     * group-by on (doc, segment). Null text yields no rows, the explode
     * convention.
     */

@@ -90,6 +90,21 @@ class OperatorSpec extends SparkSpec {
       (4L, 2L, 1L, "p q r"),
       (5L, 1L, 1L, "x y"),
       (6L, 2L, 1L, "new1 new2 new3")))
+    // a block in EVERY document: each doc keeps its 2 unique spans and
+    // the block's 2 spans survive once, in the lowest id
+    val block = "b1 b2 b3 b4 b5 b6"
+    val hot = spark.range(300).select(col("id").as("doc_id"),
+      concat(lit("a"), col("id"), lit(" b"), col("id"), lit(" c"), col("id"),
+        lit(" d"), col("id"), lit(" e"), col("id"), lit(" f"), col("id"),
+        lit(" " + block)).as("text"))
+    val hotOut = Dedup.dedupSpans(hot.repartition(7), "text", "doc_id", spanTokens = 3)
+      .as[(Long, Long, Long, String)].collect()
+    assert(hotOut.length == 300)
+    hotOut.foreach { case (id, nSpans, nKept, text) =>
+      val unique = Seq("a", "b", "c", "d", "e", "f").map(t => s"$t$id").mkString(" ")
+      val want = if (id == 0L) (4L, unique + " " + block) else (2L, unique)
+      assert(nSpans == 4L && (nKept, text) == want, s"doc $id: $nKept $text")
+    }
   }
 
   test("markCorpusFirst skeleton blocks auto-release after the first action") {
@@ -2870,6 +2885,63 @@ class OperatorSpec extends SparkSpec {
     assert(out(1L)._2 == "HOT BOILERPLATE\n\nbody 1\n\ntail 1")
     assert(out(2L) == ((2L, "\nbody 2\n\ntail 2")))
     assert(out(600L)._1 == 2L)
+  }
+
+  test("dedupLinesGlobal: a line in every document keeps per-task shuffle reads flat") {
+    import graft.dedup.Dedup
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graftbridge.Bridge
+    // docs and shuffle partitions both grow 4x (coalescing off, so the
+    // configured count holds): uniformly spread rows keep the largest
+    // per-task shuffle read flat, while a key whose one-row-per-doc set
+    // sits in one task grows with the doc count. Two unique lines per doc
+    // keep the hot line a large share of every stage's rows.
+    val hot = "This site uses cookies. See our Privacy Policy for details."
+    val maxTaskRows = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => maxTaskRows.getAndAccumulate(
+          m.shuffleReadMetrics.recordsRead, math.max(_, _)))
+    }
+    def run(n: Int, parts: Int): Long = {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val corpus = spark.range(n).select(col("id").as("doc_id"),
+        concat(lit("u0 "), col("id"), lit("\nu1 "), col("id"), lit("\n" + hot))
+          .as("text"))
+        .repartition(8).cache()
+      corpus.count()
+      Bridge.drainListenerBus(spark)
+      maxTaskRows.set(0L)
+      val out = Dedup.dedupLinesGlobal(corpus, "text", "doc_id")
+        .as[(Long, Long, String)].collect()
+      Bridge.drainListenerBus(spark)
+      corpus.unpersist()
+      // every doc keeps its 2 unique lines; the hot line is kept once, in doc 0
+      assert(out.length == n)
+      out.foreach { case (id, kept, text) =>
+        val want = s"u0 $id\nu1 $id" + (if (id == 0L) "\n" + hot else "")
+        assert(kept == (if (id == 0L) 3L else 2L) && text == want,
+          s"doc $id kept $kept: $text")
+      }
+      maxTaskRows.get
+    }
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val small = run(500, 4)
+      val big = run(2000, 16)
+      assert(big.toDouble / small < 1.5,
+        s"largest per-task shuffle read grew $small -> $big rows at 4x docs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("temperatureWeights flattens by q ∝ p^(1/T), preserving expected size") {

@@ -162,6 +162,8 @@ class WarcSpec extends SparkSpec {
       .sortBy(r => (r.recordId, r.url))
     assert(a.length == 125 && a.toSeq == b.toSeq,
       s"splittable gz ${a.length} rows vs plain ${b.length}")
+    // the one-task Hadoop-codec read of the same archive reads every member
+    assert(WarcSource.records(spark, gzPath).count() == 125)
     // the intake head routes through the splittable path too
     val html = WarcSource.htmlDocuments(spark, gzPath, gzMembers = true)
     assert(html.count() == 121, s"html intake: ${html.count()}")
