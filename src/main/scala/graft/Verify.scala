@@ -7,10 +7,9 @@ object Verify {
     val Array(sfDir, outDir) = args
     // Key oracle trained-state exports by this run's outdir so dumping two
     // scale factors before one compare pass can't clobber each other's
-    // state (and /tmp isn't shared with other local users). Must be set
-    // before anything touches SparkEntry: the query objects render their
-    // oracle SQL (the reads) when they initialize, and the queries write
-    // the exports when they run.
+    // state (and /tmp isn't shared with other local users). The queries
+    // write the exports under it when they run, and oracleSql names it in
+    // the reads it renders below.
     sys.props("graft.oracle.exportRoot") =
       new java.io.File(outDir, "oracle_export").getAbsolutePath
     // optional comma-separated filter for targeted re-runs (e.g. gating one

@@ -510,7 +510,9 @@ object SimilarityQ {
        |ORDER BY query_id, mmr_rank""".stripMargin
   }
 
-  val oracles: Map[String, String] = baseOracles +
+  // built on each call: the export paths name the `graft.oracle.exportRoot`
+  // in force when the SQL is dumped, not when this object initialized
+  def oracles: Map[String, String] = baseOracles +
     ("s15_mmr_rerank" -> mmrOracle()) +
     ("s03_knn_ivf" -> ivfSingleOracle("s03_knn_ivf", k = 20, probes = 4)) +
     ("s05_knn_ivf_indexed" ->

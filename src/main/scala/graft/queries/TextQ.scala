@@ -1127,7 +1127,9 @@ object TextQ {
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  // built on each call: the export paths name the `graft.oracle.exportRoot`
+  // in force when the SQL is dumped, not when this object initialized
+  def oracles: Map[String, String] = Map(
     "t57_phrase_batch" -> t57OracleSql,
     "t59_phrase_indexed_batch" -> t57OracleSql,
     "t56_phrase_search" -> t56OracleSql,

@@ -4,6 +4,7 @@ import java.util.regex.Pattern
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One parsed `<page>` from a MediaWiki dump (WikiExtractor.py:589-651's
@@ -20,24 +21,25 @@ case class WikiPage(id: String, title: String, redirect: Boolean, text: String)
   * to one task per file (same formats the reference accepts,
   * WikiExtractor.py:739-754).
   *
-  * Per-record parsing is regex over the page fragment only (no DOM, no
-  * allocation beyond the matched groups).
+  * Per-record parsing scans the record from its `<page` on with `indexOf`
+  * (no DOM, no copy of the record; the fields are the only allocations).
   */
 object WikiXmlSource {
 
-  private val titleRe = Pattern.compile("<title>(.*?)</title>", Pattern.DOTALL)
-  private val idRe = Pattern.compile("<id>(.*?)</id>")
   private val redirectRe = Pattern.compile("<redirect\\b")
-  private val textRe = Pattern.compile("<text[^>]*>(.*?)</text>", Pattern.DOTALL)
   private val baseRe = Pattern.compile("<base>(.*?)</base>")
 
-  /** NOTE for directory inputs: Hadoop's input layer silently skips files
+  private val DefaultSplitBytes = 16L * 1024 * 1024
+
+  /** The dump's `</page>`-delimited records (the delimiter dropped), one
+    * task per split of at most `maxSplitBytes`.
+    *
+    * NOTE for directory inputs: Hadoop's input layer silently skips files
     * whose names start with `_` or `.` (the "hidden" convention used by
     * `_SUCCESS` markers) — dump parts must not be named that way.
     */
-  def pages(spark: SparkSession, path: String,
-            maxSplitBytes: Long = 16L * 1024 * 1024): Dataset[WikiPage] = {
-    import spark.implicits._
+  def records(spark: SparkSession, path: String,
+              maxSplitBytes: Long = DefaultSplitBytes): RDD[String] = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", "</page>")
     // cap split size so a single-file dump still fans out across all
@@ -47,28 +49,65 @@ object WikiXmlSource {
       .newAPIHadoopFile(path, classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text], conf)
       .map(_._2.toString)
-      .flatMap(parsePage)
-      .toDS()
+  }
+
+  /** The dump's pages: [[records]] through [[parsePage]]. */
+  def pages(spark: SparkSession, path: String,
+            maxSplitBytes: Long = DefaultSplitBytes): Dataset[WikiPage] = {
+    import spark.implicits._
+    records(spark, path, maxSplitBytes).flatMap(parsePage).toDS()
   }
 
   /** Parse one `</page>`-delimited record; None for non-page chunks
     * (the leading siteinfo block, trailing `</mediawiki>`).
+    *
+    * From the record's first `<page` on, the fields are what these regexes
+    * find, located with `indexOf` instead: `<title>(.*?)</title>` and
+    * `<text[^>]*>(.*?)</text>` (both DOTALL; no text gives ""),
+    * `<id>(.*?)</id>` (`.` stops at a line terminator) and `<redirect\b`.
     */
   def parsePage(record: String): Option[WikiPage] = {
     val start = record.indexOf("<page")
-    if (start < 0) None
+    if (start < 0) return None
+    val title = between(record, "<title>", "</title>", start)
+    val id = if (title == null) null else firstId(record, start)
+    if (id == null) None
     else {
-      val rec = record.substring(start)
-      val tm = titleRe.matcher(rec)
-      val im = idRe.matcher(rec)
-      if (!tm.find() || !im.find()) None
-      else {
-        val xm = textRe.matcher(rec)
-        val text = if (xm.find()) xm.group(1) else ""
-        Some(WikiPage(im.group(1), tm.group(1), redirectRe.matcher(rec).find(), text))
-      }
+      val open = record.indexOf("<text", start)
+      val gt = if (open < 0) -1 else record.indexOf('>', open + 5)
+      val close = if (gt < 0) -1 else record.indexOf("</text>", gt + 1)
+      val text = if (close < 0) "" else record.substring(gt + 1, close)
+      Some(WikiPage(id, title, redirectRe.matcher(record).find(start), text))
     }
   }
+
+  /** The text between the first `open` at or after `from` and the first
+    * `close` after it; null when either is missing.
+    */
+  private def between(s: String, open: String, close: String, from: Int): String = {
+    val p = s.indexOf(open, from)
+    val q = if (p < 0) -1 else s.indexOf(close, p + open.length)
+    if (q < 0) null else s.substring(p + open.length, q)
+  }
+
+  /** The group of the first `<id>(.*?)</id>` at or after `from`, where `.`
+    * matches no line terminator; null when there is none. An `<id>` whose
+    * line ends before a `</id>` is skipped, and so is every `<id>` before
+    * that line end, so each character is looked at a bounded number of times.
+    */
+  private def firstId(s: String, from: Int): String = {
+    var p = s.indexOf("<id>", from)
+    while (p >= 0) {
+      var i = p + 4
+      while (i < s.length && !s.startsWith("</id>", i) && !isLineTerminator(s.charAt(i))) i += 1
+      if (i < s.length && s.charAt(i) == '<') return s.substring(p + 4, i)
+      p = s.indexOf("<id>", i)
+    }
+    null
+  }
+
+  private def isLineTerminator(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
 
   /** Re-encode a non-splittable dump (gzip collapses to one task per file)
     * into a directory of `parts` bzip2-compressed record files that every
@@ -88,14 +127,10 @@ object WikiXmlSource {
   def recode(spark: SparkSession, inPath: String, outPath: String,
              parts: Int = 64): Unit = {
     import spark.implicits._
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", "</page>")
     val baseLines = spark.sparkContext.collectionAccumulator[String]("siteinfo-base")
-    spark.sparkContext
-      .newAPIHadoopFile(inPath, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .map { kv =>
-        val rec = kv._2.toString + "</page>"
+    records(spark, inPath)
+      .map { r =>
+        val rec = r + "</page>"
         if (rec.contains("<base>"))
           rec.linesIterator.find(_.contains("<base>")).foreach(baseLines.add)
         rec

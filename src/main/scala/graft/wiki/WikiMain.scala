@@ -1,6 +1,7 @@
 package graft.wiki
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 import graft.Tables
 
 /** CLI mirroring the reference's interface (WikiExtractor.py:683-698):
@@ -18,6 +19,23 @@ import graft.Tables
   * a cluster.
   */
 object WikiMain {
+
+  /** Extracts the dump at `infn` into `out` and returns the number of lines
+    * written, summed from the documents' own line counts as the write runs
+    * (an observed metric), so the output is never read back.
+    */
+  def writeCounted(spark: SparkSession, infn: String, out: String,
+                   cfg: WikiPipeline.Config, compress: Boolean): Long = {
+    val written = Observation("wiki-lines")
+    val docs = WikiPipeline.documents(spark, infn, cfg)
+      .observe(written, sum(col("lines")).as("lines"))
+    WikiPipeline.write(docs.toDF(), out, compress = compress)
+    written.get("lines") match {
+      case n: Long => n
+      case _ => 0L // no documents: the sum is null
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     var infn = ""
     var out = "wiki_out"
@@ -56,10 +74,9 @@ object WikiMain {
         if (templateBestEffort) WikiPipeline.TemplateOverflow.BestEffort
         else WikiPipeline.TemplateOverflow.Fail)
     val t0 = System.nanoTime()
-    val rendered = WikiPipeline.run(spark, infn, cfg)
-    WikiPipeline.write(rendered, out, compress = compress)
+    val lines = writeCounted(spark, infn, out, cfg, compress)
     val secs = (System.nanoTime() - t0) / 1e9
-    println(f"wrote ${spark.read.textFile(out).count()} lines to $out in $secs%.1f s")
+    println(f"wrote $lines lines to $out in $secs%.1f s")
     spark.stop()
   }
 }

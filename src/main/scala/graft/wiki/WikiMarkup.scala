@@ -47,10 +47,6 @@ object WikiMarkup {
   val placeholderTags: Seq[(String, String)] = Seq("math" -> "formula", "code" -> "codice")
 
   // --- compiled patterns (thread-safe; Matchers are per-call) ---
-  private val templateOpen = Pattern.compile("\\{\\{")
-  private val templateClose = Pattern.compile("\\}\\}")
-  private val tableOpen = Pattern.compile("\\{\\|")
-  private val tableClose = Pattern.compile("\\|\\}")
   private val discardPats: Seq[(String, Pattern)] = discardElements.map(t => (t,
     Pattern.compile(s"<\\s*$t\\b[^>]*>.*?<\\s*/\\s*$t>", Pattern.DOTALL | Pattern.CASE_INSENSITIVE)))
   private val placeholderPats: Seq[(String, Pattern, String)] = placeholderTags.map { case (t, repl) =>
@@ -64,12 +60,8 @@ object WikiMarkup {
   private val italicQuote = new Regex("''\"(.*?)\"''")
   private val italic = new Regex("''([^']*)''")
   private val quoteQuote = new Regex("\"\"(.*?)\"\"")
-  private val spaces = Pattern.compile(" {2,}")
-  private val dots = Pattern.compile("\\.{4,}")
   private val wikiLink = new Regex("\\[\\[([^\\[]*?)(?:\\|([^\\[]*?))?\\]\\](\\w*)")
   private val parametrizedLink = Pattern.compile("\\[\\[.*?\\]\\]")
-  private val entityRef = new Regex("&#?(\\w+);")
-  private val punctOnlyLines = Pattern.compile("\\n\\W+?\\n")
   private val magicWords = Pattern.compile("__[A-Z]+__")
   private val sectionRe = Pattern.compile("(==+)\\s*(.*?)\\s*\\1")
   private val wsUnderscore = Pattern.compile("[\\s_]+")
@@ -97,69 +89,101 @@ object WikiMarkup {
   }
 
   /** HTML/XML character-reference unescaping (WikiExtractor.py:205-220):
-    * unknown or invalid references are left untouched.
+    * unknown or invalid references are left untouched. The references are
+    * the matches of `&#?(\w+);` (ASCII `\w`), found by a scan over the `&`
+    * positions.
     */
-  def unescape(text: String): String =
-    entityRef.replaceAllIn(text, m => {
-      val whole = m.matched
-      val code = m.group(1)
-      val out =
-        try {
-          if (whole.charAt(1) == '#') {
-            val cp = if (whole.charAt(2) == 'x') Integer.parseInt(code.substring(1), 16)
-                     else Integer.parseInt(code)
-            new String(Character.toChars(cp))
-          } else Entities.name2codepoint.get(code) match {
-            case Some(cp) => new String(Character.toChars(cp))
-            case None => whole
-          }
-        } catch { case _: Exception => whole }
-      Regex.quoteReplacement(out)
-    })
+  def unescape(text: String): String = {
+    var p = text.indexOf('&')
+    if (p < 0) return text
+    val n = text.length
+    var sb: java.lang.StringBuilder = null
+    var cur = 0
+    while (p >= 0) {
+      val q = if (p + 1 < n && text.charAt(p + 1) == '#') p + 2 else p + 1
+      var r = q
+      while (r < n && isWordChar(text.charAt(r))) r += 1
+      var next = p + 1
+      if (r > q && r < n && text.charAt(r) == ';') {
+        if (sb == null) sb = new java.lang.StringBuilder(n)
+        sb.append(text, cur, p).append(characterRef(text.substring(p, r + 1), text.substring(q, r)))
+        cur = r + 1
+        next = cur
+      }
+      p = text.indexOf('&', next)
+    }
+    if (sb == null) text else sb.append(text, cur, n).toString
+  }
 
-  /** Nesting-aware span removal for `{{..}}` / `{\|..\|}`
-    * (WikiExtractor.py:274-327). Stack scanner with the reference's
+  /** The character a reference `whole` with name or number `code` stands for. */
+  private def characterRef(whole: String, code: String): String =
+    try {
+      if (whole.charAt(1) == '#') {
+        val cp = if (whole.charAt(2) == 'x') Integer.parseInt(code.substring(1), 16)
+                 else Integer.parseInt(code)
+        new String(Character.toChars(cp))
+      } else Entities.name2codepoint.get(code) match {
+        case Some(cp) => new String(Character.toChars(cp))
+        case None => whole
+      }
+    } catch { case _: Exception => whole }
+
+  /** Nesting-aware span removal for literal delimiters such as `{{`/`}}`
+    * and `{|`/`|}` (WikiExtractor.py:274-327), with the reference's
     * unbalanced-input behavior (fixture-verified): a stray close is kept; an
     * open left unclosed at EOF is kept unless some close appeared after it,
     * in which case everything up to the last close is dropped.
     */
-  def dropNested(text: String, open: String, close: String): String =
-    dropNested(text, Pattern.compile(open), Pattern.compile(close))
+  def dropNested(text: String, open: String, close: String): String = {
+    val spans = nestedSpans(text, open, close, closeTrailing = true)
+    if (spans.isEmpty) text else dropSpans(spans, text)
+  }
 
-  private def dropNested(text: String, openRe: Pattern, closeRe: Pattern): String = {
-    val om = openRe.matcher(text)
-    val cm = closeRe.matcher(text)
+  /** The reference's nesting scan over two literal delimiters: the
+    * top-level `open..close` spans, in order. Each delimiter's next
+    * position is found with `indexOf` and kept until the scan passes it,
+    * so the scan is linear however unbalanced the text is. Only the depth
+    * and the outermost open's start matter, so no stack is kept. With
+    * `closeTrailing`, an open still unclosed at the end spans to the last
+    * close after it, if any ([[dropNested]]'s rule).
+    */
+  private def nestedSpans(text: String, open: String, close: String,
+                          closeTrailing: Boolean): mutable.ArrayBuffer[(Int, Int)] = {
+    require(open.nonEmpty && close.nonEmpty, "delimiters must be non-empty")
     val spans = mutable.ArrayBuffer.empty[(Int, Int)]
-    val stack = mutable.ArrayBuffer.empty[Int] // start offsets of open delims
-    var pos = 0
+    var nextOpen = text.indexOf(open)
+    var nextClose = text.indexOf(close)
+    var depth = 0
+    var outer = -1 // start of the outermost open still unclosed
     var lastCloseEnd = -1
-    var done = false
-    while (!done) {
-      val hasOpen = om.find(pos)
-      val openStart = if (hasOpen) om.start else Int.MaxValue
-      val hasClose = cm.find(pos)
-      val closeStart = if (hasClose) cm.start else Int.MaxValue
-      if (!hasOpen && !hasClose) done = true
-      else if (openStart < closeStart) { stack += openStart; pos = om.end() }
-      else {
-        if (stack.nonEmpty) {
-          val top = stack.remove(stack.length - 1)
-          if (stack.isEmpty) spans += ((top, cm.end()))
+    while (nextOpen >= 0 || nextClose >= 0) {
+      val pos =
+        if (nextOpen >= 0 && (nextClose < 0 || nextOpen < nextClose)) {
+          if (depth == 0) outer = nextOpen
+          depth += 1
+          nextOpen + open.length
+        } else {
+          val end = nextClose + close.length
+          if (depth > 0) {
+            depth -= 1
+            if (depth == 0) spans += ((outer, end))
+          }
+          lastCloseEnd = end
+          end
         }
-        lastCloseEnd = cm.end()
-        pos = cm.end()
-      }
+      // a delimiter overlapping the one just consumed is searched again
+      if (nextOpen >= 0 && nextOpen < pos) nextOpen = text.indexOf(open, pos)
+      if (nextClose >= 0 && nextClose < pos) nextClose = text.indexOf(close, pos)
     }
-    if (stack.nonEmpty && lastCloseEnd > stack.head)
-      spans += ((stack.head, lastCloseEnd))
-    dropSpans(spans.sortBy(_._1).toSeq, text)
+    if (closeTrailing && depth > 0 && lastCloseEnd > outer) spans += ((outer, lastCloseEnd))
+    spans
   }
 
   /** Remove the given (start, end) spans (WikiExtractor.py:329-338),
     * including its tolerance of overlapping spans (cursor moves to each
     * span's end unconditionally).
     */
-  private def dropSpans(spans: Seq[(Int, Int)], text: String): String = {
+  private def dropSpans(spans: collection.Seq[(Int, Int)], text: String): String = {
     val sb = new java.lang.StringBuilder(text.length)
     var cur = 0
     for ((s, e) <- spans) {
@@ -184,9 +208,25 @@ object WikiMarkup {
   private def patSub(p: Pattern, text: String, repl: String): String =
     p.matcher(text).replaceAll(repl)
 
+  /** [[patSub]], run only when the text holds `literal`, which every match
+    * of `p` contains.
+    */
+  private def patSubIf(literal: String, p: Pattern, text: String, repl: String): String =
+    if (text.contains(literal)) patSub(p, text, repl) else text
+
+  /** `re`'s matches replaced by `repl` of their first group, run only when
+    * the text holds `literal`, which every match of `re` contains.
+    */
+  private def groupSubIf(literal: String, re: Regex, text: String)(repl: String => String): String =
+    if (text.contains(literal)) re.replaceAllIn(text, m => Regex.quoteReplacement(repl(m.group(1))))
+    else text
+
   /** ASCII `[A-Za-z0-9]`: the characters of every tag name. */
   private def isAsciiAlnum(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
+
+  /** Java regex `\w` without UNICODE_CHARACTER_CLASS: `[a-zA-Z_0-9]`. */
+  private def isWordChar(c: Char): Boolean = c == '_' || isAsciiAlnum(c)
 
   /** Java regex `\s` without UNICODE_CHARACTER_CLASS: ASCII whitespace only. */
   private def isRegexSpace(c: Char): Boolean =
@@ -349,6 +389,51 @@ object WikiMarkup {
     false
   }
 
+  /** `c{min,}` replaced by `repl`: every run of at least `min` `c`s. */
+  private def collapseRuns(text: String, c: Char, min: Int, repl: String): String = {
+    val n = text.length
+    var sb: java.lang.StringBuilder = null
+    var cur = 0
+    var p = text.indexOf(c)
+    while (p >= 0) {
+      var e = p + 1
+      while (e < n && text.charAt(e) == c) e += 1
+      if (e - p >= min) {
+        if (sb == null) sb = new java.lang.StringBuilder(n)
+        sb.append(text, cur, p).append(repl)
+        cur = e
+      }
+      p = text.indexOf(c, e)
+    }
+    if (sb == null) text else sb.append(text, cur, n).toString
+  }
+
+  /** `\n\W+?\n` replaced by `\n`, as a scan over the `\n` positions: the
+    * shortest run of non-word characters (`\n` among them) after a `\n`
+    * that is followed by another `\n`.
+    */
+  private def dropPunctOnlyLines(text: String): String = {
+    val n = text.length
+    var sb: java.lang.StringBuilder = null
+    var cur = 0
+    var p = text.indexOf('\n')
+    while (p >= 0) {
+      var end = -1
+      var j = p + 1
+      while (end < 0 && j + 1 < n && !isWordChar(text.charAt(j))) {
+        if (text.charAt(j + 1) == '\n') end = j + 2
+        j += 1
+      }
+      if (end >= 0) {
+        if (sb == null) sb = new java.lang.StringBuilder(n)
+        sb.append(text, cur, p).append('\n')
+        cur = end
+      }
+      p = text.indexOf('\n', if (end >= 0) end else p + 1)
+    }
+    if (sb == null) text else sb.append(text, cur, n).toString
+  }
+
   /** `\[\w+.*? (.*?)\]` replaced by its group, as a linear scan: after `[`
     * an ASCII `\w` character, then the first space, then the first `]`
     * after it, neither past a line terminator (`.` stops there). The
@@ -397,7 +482,8 @@ object WikiMarkup {
     * The contract is the reference's step order and its regexes' Java 17
     * semantics; three steps are hand scans that give the same bytes as the
     * regex passes they replace (the regex form is kept as a test oracle):
-    *  1. `{{..}}`, then `{|..|}` (dropNested); wiki links; other `[[..]]`;
+    *  1. `{{..}}`, then `{|..|}` (dropNested, an `indexOf` scan over the
+    *     literal delimiters); wiki links; other `[[..]]`;
     *  1. external links: a linear scan for `\[\w+.*? (.*?)\]`, then
     *     `\[\w+[&\]]*\]` as a regex;
     *  1. bold/italic/quotes; `unescape` twice;
@@ -410,6 +496,10 @@ object WikiMarkup {
     *     runs only when the current text holds `<`, ASCII whitespace and
     *     the element name, so a name joined by an earlier removal counts;
     *  1. guillemets, preformatted lines, final whitespace/punctuation.
+    * Entity references, runs of spaces and dots, and punctuation-only lines
+    * are scans too. A regex pass whose every match contains a literal (`[[`,
+    * `[`, `'''''`, `'''`, `''"`, `''`, `""`, `__`) runs only when the current
+    * text holds it.
     * Regex semantics kept by the scans: `\s` and case folding are ASCII
     * only; `\b` after a tag name treats `Character.isLetterOrDigit`, `_`
     * and non-spacing marks as word characters; `[^>]*` and `[^/]*` cross
@@ -420,25 +510,27 @@ object WikiMarkup {
     var text = text0
 
     // Transclusions + tables (nesting-aware).
-    text = dropNested(text, templateOpen, templateClose)
-    text = dropNested(text, tableOpen, tableClose)
+    text = dropNested(text, "{{", "}}")
+    text = dropNested(text, "{|", "|}")
 
     // Links: expand innermost in one pass, then drop remaining enclosing.
-    text = wikiLink.replaceAllIn(text, m =>
-      Regex.quoteReplacement(
-        anchorFor(m.group(1), Option(m.group(2)), m.group(3), keepLinks, namespaces)))
-    text = patSub(parametrizedLink, text, "")
+    if (text.contains("[[")) {
+      text = wikiLink.replaceAllIn(text, m =>
+        Regex.quoteReplacement(
+          anchorFor(m.group(1), Option(m.group(2)), m.group(3), keepLinks, namespaces)))
+      text = patSubIf("[[", parametrizedLink, text, "")
+    }
 
     // External links.
     text = expandExternalLinks(text)
-    text = patSub(externalLinkNoAnchor, text, "")
+    text = patSubIf("[", externalLinkNoAnchor, text, "")
 
     // Bold / italic / quotes.
-    text = boldItalic.replaceAllIn(text, m => Regex.quoteReplacement(m.group(1)))
-    text = bold.replaceAllIn(text, m => Regex.quoteReplacement(m.group(1)))
-    text = italicQuote.replaceAllIn(text, m => Regex.quoteReplacement("&quot;" + m.group(1) + "&quot;"))
-    text = italic.replaceAllIn(text, m => Regex.quoteReplacement("&quot;" + m.group(1) + "&quot;"))
-    text = quoteQuote.replaceAllIn(text, m => Regex.quoteReplacement(m.group(1)))
+    text = groupSubIf("'''''", boldItalic, text)(identity)
+    text = groupSubIf("'''", bold, text)(identity)
+    text = groupSubIf("''\"", italicQuote, text)("&quot;" + _ + "&quot;")
+    text = groupSubIf("''", italic, text)("&quot;" + _ + "&quot;")
+    text = groupSubIf("\"\"", quoteQuote, text)(identity)
     text = text.replace("'''", "").replace("''", "&quot;")
 
     // HTML entities, twice (&amp;nbsp; → &nbsp; →  ).
@@ -474,13 +566,13 @@ object WikiMarkup {
 
     // Final cleanup.
     text = text.replace("\t", " ")
-    text = patSub(spaces, text, " ")
-    text = patSub(dots, text, "...")
+    text = collapseRuns(text, ' ', 2, " ")
+    text = collapseRuns(text, '.', 4, "...")
     text = text.replace(" ,:.)]Â»", ",:.)]Â»") // WikiExtractor.py:448 (literal sequence)
     text = text.replace("[(Â« ", "[(Â«")       // WikiExtractor.py:449
-    text = patSub(punctOnlyLines, text, "\n")
+    text = dropPunctOnlyLines(text)
     text = text.replace(",,", ",").replace(",.", ".")
-    text = patSub(magicWords, text, "")
+    text = patSubIf("__", magicWords, text, "")
     text
   }
 
@@ -1226,32 +1318,8 @@ object WikiMarkup {
       "urlencode", "formatnum", "plural", "ns")
 
   private def expandOnce(text: String, templates: collection.Map[String, String]): String = {
-    // cheap bail-out only when NO span can possibly evaluate: magic
-    // words ({{lc:…}}) evaluate even with an empty template library, so
-    // the old `empty lib && no {{#` shortcut would skip them
-    if (text.indexOf("{{") < 0) return text
-    val om = templateOpen.matcher(text)
-    val cm = templateClose.matcher(text)
-    // top-level spans, same scan discipline as dropNested
-    val spans = mutable.ArrayBuffer.empty[(Int, Int)]
-    val stack = mutable.ArrayBuffer.empty[Int]
-    var pos = 0
-    var done = false
-    while (!done) {
-      val hasOpen = om.find(pos)
-      val openStart = if (hasOpen) om.start else Int.MaxValue
-      val hasClose = cm.find(pos)
-      val closeStart = if (hasClose) cm.start else Int.MaxValue
-      if (!hasOpen && !hasClose) done = true
-      else if (openStart < closeStart) { stack += openStart; pos = om.end() }
-      else {
-        if (stack.nonEmpty) {
-          val top = stack.remove(stack.length - 1)
-          if (stack.isEmpty) spans += ((top, cm.end()))
-        }
-        pos = cm.end()
-      }
-    }
+    // top-level spans, the scan dropNested uses; no trailing-close rule
+    val spans = nestedSpans(text, "{{", "}}", closeTrailing = false)
     if (spans.isEmpty) return text
     val sb = new java.lang.StringBuilder(text.length)
     var cur = 0

@@ -1,13 +1,18 @@
 package graft.wiki
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{WikiPage, WikiXmlSource}
 
-/** The reference's end-to-end flow (dump → filter → clean → render → write),
-  * as Dataset transforms. Every stage is per-row — the whole pipeline runs
-  * in a single Spark stage with no shuffle, which is the property that makes
-  * it hold at 100 TB: wall-clock scales with executors, full stop.
+/** The reference's end-to-end flow (dump → filter → clean → render → write)
+  * as one Spark-free function of a page, [[renderRecord]]: it parses a
+  * `</page>` record, keeps articles (redirect, namespace, incubator and
+  * vital-title filters), expands templates when asked, then cleans,
+  * compacts and renders the page in sentence format. [[run]] applies it in
+  * a single `flatMap` over the dump's record RDD, so the whole pipeline is
+  * one Spark stage with no shuffle, and a page becomes a Spark row only
+  * once it is rendered. That is the property that makes it hold at 100 TB:
+  * wall-clock scales with executors, full stop.
   */
 object WikiPipeline {
 
@@ -56,7 +61,7 @@ object WikiPipeline {
   }
 
   /** The dump's Template: pages as a name → transcluded-body map, for
-    * broadcast into [[extract]]. The template namespace is a small slice of
+    * broadcast into [[renderRecord]]. The template namespace is a small slice of
     * any dump (curated content, no article bodies), so driver-side collect
     * + closure broadcast is the right scale shape — every executor needs
     * the whole library anyway.
@@ -111,7 +116,7 @@ object WikiPipeline {
   /** Load a vital-titles file (reference load_vital_titles,
     * WikiExtractor.py:654-666): one `Title|||tag1|||tag2` line per entry.
     * Returns (title, tags) — small by construction (a curated list), so
-    * downstream joins broadcast it.
+    * [[vitalTags]] collects it for broadcast.
     */
   def loadVitalTitles(spark: SparkSession, path: String): DataFrame =
     spark.read.textFile(path).toDF("line")
@@ -119,88 +124,97 @@ object WikiPipeline {
       .select(element_at(col("parts"), 1).as("title"),
         slice(col("parts"), lit(2), greatest(size(col("parts")) - 1, lit(0))).as("tags"))
 
-  /** Redirect + namespace filtering (WikiExtractor.py:627-629), plus
-    * incubator-mode `Wx/lang/Title` selection (WikiExtractor.py:631).
+  /** Tags by title from [[loadVitalTitles]], one entry per line of the
+    * file: a title listed twice renders twice, once with each line's tags.
     */
-  def articles(pages: Dataset[WikiPage], cfg: Config = Config()): Dataset[WikiPage] = {
-    import pages.sparkSession.implicits._
-    val ns = cfg.namespaces
-    val base = pages.filter { p =>
-      val colon = p.title.indexOf(':')
-      !p.redirect && (colon < 0 || ns.contains(p.title.substring(0, colon)))
-    }
-    cfg.incubator match {
-      case None => base
+  def vitalTags(spark: SparkSession, path: String): Map[String, Seq[Seq[String]]] =
+    loadVitalTitles(spark, path).collect().toSeq
+      .groupMap(_.getString(0))(_.getSeq[String](1).toSeq)
+
+  /** The page as an article, or None: redirects and pages outside the
+    * accepted namespaces are skipped (WikiExtractor.py:627-629), and in
+    * incubator mode only `Wx/lang/Title` pages are kept, retitled `Title`
+    * (WikiExtractor.py:631).
+    */
+  def article(p: WikiPage, cfg: Config): Option[WikiPage] = {
+    val colon = p.title.indexOf(':')
+    if (p.redirect || (colon >= 0 && !cfg.namespaces.contains(p.title.substring(0, colon)))) None
+    else cfg.incubator match {
+      case None => Some(p)
       case Some(lang) =>
-        base.flatMap { p =>
-          val parts = p.title.split("/")
-          if (parts.length > 2 && parts(1) == lang) Some(p.copy(title = parts(2))) else None
-        }
+        val parts = p.title.split("/")
+        if (parts.length > 2 && parts(1) == lang) Some(p.copy(title = parts(2))) else None
     }
   }
 
-  /** Clean + compact each article: adds `lines` (the compacted paragraphs)
-    * keeping id/title. Pure per-row CPU — stays in one stage. A non-empty
-    * `templates` library is broadcast once per executor (not serialized per
-    * task closure) and applied before cleaning.
+  /** Clean + compact one article body into its paragraphs. With a template
+    * library the body is expanded first, `cfg.templateLevels` deep; without
+    * one it goes straight to `clean` (reference parity: parser functions
+    * evaluate inside expansion even when the library is empty).
     */
-  def extract(articles: Dataset[WikiPage], cfg: Config = Config(),
-              templates: Map[String, String] = Map.empty): DataFrame = {
-    val keepLinks = cfg.keepLinks
-    val structure = cfg.structure
-    val ns = cfg.namespaces
-    val levels = cfg.templateLevels
-    // expansion is explicit: with the flag off AND no library, text must
-    // flow straight to clean() (reference parity — parser functions now
-    // EVALUATE inside expandTemplates, so reaching it with an empty map is
-    // no longer behavior-neutral)
-    val doExpand = cfg.expandTemplates || templates.nonEmpty
-    val bcTemplates =
-      if (doExpand) Some(articles.sparkSession.sparkContext.broadcast(templates)) else None
-    val extractUdf = udf { (text: String) =>
-      val expanded = bcTemplates match {
-        case Some(bc) => WikiMarkup.expandTemplates(text, bc.value, levels)
-        case None => text
-      }
-      WikiMarkup.compact(WikiMarkup.clean(expanded, keepLinks, ns), structure)
-    }
-    articles.toDF()
-      .withColumn("lines", extractUdf(col("text")))
-      .select("id", "title", "lines")
-  }
-
-  /** Attach vital-article tags via broadcast join and keep only listed
-    * titles (the reference's vital_titles/vital_tags path,
-    * WikiExtractor.py:630-643). `vital` must have columns (title, tags).
-    */
-  def withVitalTags(extracted: DataFrame, vital: DataFrame): DataFrame =
-    extracted.join(broadcast(vital), "title")
-
-  /** Sentence-format rendering (WikiDocumentSentences, WikiExtractor.py:134):
-    * a blank line, `title:tag|||tag`, then one compacted line per row.
-    */
-  def toSentenceFormat(extracted: DataFrame): DataFrame = {
-    val render = udf { (title: String, tags: Seq[String], lines: Seq[String]) =>
-      val tagStr = Option(tags).getOrElse(Seq.empty).mkString("|||")
-      "\n" + title + ":" + tagStr + "\n" + lines.map(_ + "\n").mkString
-    }
-    val withTags =
-      if (extracted.columns.contains("tags")) extracted
-      else extracted.withColumn("tags", array().cast("array<string>"))
-    withTags.select(col("id"),
-      render(col("title"), col("tags"), col("lines")).as("rendered"))
+  def extractLines(text: String, cfg: Config,
+                   templates: Option[collection.Map[String, String]]): Seq[String] = {
+    val expanded = templates.fold(text)(WikiMarkup.expandTemplates(text, _, cfg.templateLevels))
+    WikiMarkup.compact(WikiMarkup.clean(expanded, cfg.keepLinks, cfg.namespaces), cfg.structure)
   }
 
   /** Tanl document format (`<doc id url title>`, WikiExtractor.py:121-132),
     * with the reference's URL scheme from the dump's site base.
     */
-  def toDocFormat(extracted: DataFrame, urlPrefix: String): DataFrame = {
-    val render = udf { (id: String, title: String, lines: Seq[String]) =>
-      val url = WikiMarkup.pageUrl(urlPrefix, id)
-      s"""<doc id="$id" url="$url" title="$title">""" + "\n" + title + "\n" +
-        lines.map(_ + "\n").mkString + "</doc>"
+  def docFormat(id: String, title: String, lines: Seq[String], urlPrefix: String): String = {
+    val url = WikiMarkup.pageUrl(urlPrefix, id)
+    s"""<doc id="$id" url="$url" title="$title">""" + "\n" + title + "\n" +
+      lines.map(_ + "\n").mkString + "</doc>"
+  }
+
+  /** One rendered document: the page id, its sentence-format text, and the
+    * number of newlines in that text, which is the number of lines
+    * [[write]] writes for it.
+    */
+  final case class Doc(id: String, rendered: String, lines: Long)
+
+  private val docEncoder: Encoder[Doc] = Encoders.product[Doc]
+
+  /** The per-page function. A record that is not an article, or whose title
+    * `vital` (when given) does not list, gives no document; otherwise the
+    * body is cleaned once and rendered in sentence format
+    * (WikiDocumentSentences, WikiExtractor.py:134) once per vital line of
+    * the title, or once without `vital`: a blank line, `title:tag|||tag`,
+    * then one line per compacted paragraph.
+    */
+  def renderRecord(record: String, cfg: Config,
+                   vital: Option[collection.Map[String, Seq[Seq[String]]]],
+                   templates: Option[collection.Map[String, String]]): Seq[Doc] =
+    WikiXmlSource.parsePage(record).flatMap(article(_, cfg)) match {
+      case None => Nil
+      case Some(a) =>
+        val tagLines = vital.fold(Seq(Seq.empty[String]))(_.getOrElse(a.title, Nil))
+        if (tagLines.isEmpty) Nil
+        else {
+          val lines = extractLines(a.text, cfg, templates)
+          val body = lines.map(_ + "\n").mkString
+          tagLines.map { tags =>
+            val header = "\n" + a.title + ":" + tags.mkString("|||") + "\n"
+            Doc(a.id, header + body, header.count(_ == '\n') + lines.size)
+          }
+        }
     }
-    extracted.select(col("id"), render(col("id"), col("title"), col("lines")).as("rendered"))
+
+  /** Every document of the dump: [[renderRecord]] in one `flatMap` over
+    * [[WikiXmlSource.records]], as (id, rendered, lines). The vital titles
+    * and the template library (only with `expandTemplates`) are collected
+    * on the driver and each broadcast as one value.
+    */
+  def documents(spark: SparkSession, dumpPath: String, cfg: Config = Config()): Dataset[Doc] = {
+    val sc = spark.sparkContext
+    val vital = cfg.vitalFn.map(fn => sc.broadcast(vitalTags(spark, fn)))
+    val templates =
+      if (!cfg.expandTemplates) None
+      else Some(sc.broadcast(
+        templateLibrary(WikiXmlSource.pages(spark, dumpPath), overflow = cfg.templateOverflow)))
+    val docs = WikiXmlSource.records(spark, dumpPath)
+      .flatMap(renderRecord(_, cfg, vital.map(_.value), templates.map(_.value)))
+    spark.createDataset(docs)(docEncoder)
   }
 
   /** Size-split text sink — the OutputSplitter (WikiExtractor.py:526-582)
@@ -221,27 +235,9 @@ object WikiPipeline {
       .mode("overwrite").text(path)
   }
 
-  /** Full reference flow: dump path → rendered docs. With a vital-titles
-    * file, unlisted pages are dropped by a broadcast semi-join BEFORE the
-    * (expensive) markup cleaning — the curated list is tiny, the dump is
-    * not — and tags are attached after extraction.
+  /** Full reference flow: dump path → rendered docs as (id, rendered), the
+    * `rendered` text ending in its newline.
     */
-  def run(spark: SparkSession, dumpPath: String, cfg: Config = Config()): DataFrame = {
-    val pages = WikiXmlSource.pages(spark, dumpPath)
-    // template library from the raw pages (articles() filters Template: out)
-    val templates =
-      if (cfg.expandTemplates)
-        templateLibrary(pages, overflow = cfg.templateOverflow)
-      else Map.empty[String, String]
-    val arts = articles(pages, cfg)
-    cfg.vitalFn match {
-      case None => toSentenceFormat(extract(arts, cfg, templates))
-      case Some(fn) =>
-        import arts.sparkSession.implicits._
-        val vital = loadVitalTitles(spark, fn)
-        val kept = arts.join(broadcast(vital), Seq("title"), "left_semi")
-          .as[graft.sources.WikiPage]
-        toSentenceFormat(withVitalTags(extract(kept, cfg, templates), broadcast(vital)))
-    }
-  }
+  def run(spark: SparkSession, dumpPath: String, cfg: Config = Config()): DataFrame =
+    documents(spark, dumpPath, cfg).select("id", "rendered")
 }

@@ -5,11 +5,11 @@ import scala.collection.mutable
 import scala.util.matching.Regex
 
 import WikiMarkup.{acceptedNamespaces, discardElements, ignoredTags, placeholderTags,
-  selfClosingTags, unescape}
+  selfClosingTags}
 
 /** `WikiMarkup.clean` as a sequence of regex passes, one per pattern, the
   * way the reference runs it (WikiExtractor.py:368-456). `WikiMarkup.clean`
-  * replaces three of these steps with hand scans; this is the oracle the
+  * replaces several of these steps with hand scans; this is the oracle the
   * differential spec holds it to, byte for byte.
   */
 object CleanOracle {
@@ -45,6 +45,26 @@ object CleanOracle {
   private val parametrizedLink = Pattern.compile("\\[\\[.*?\\]\\]")
   private val punctOnlyLines = Pattern.compile("\\n\\W+?\\n")
   private val magicWords = Pattern.compile("__[A-Z]+__")
+  private val entityRef = new Regex("&#?(\\w+);")
+
+  /** Character-reference unescaping as one regex pass. */
+  private def unescape(text: String): String =
+    entityRef.replaceAllIn(text, m => {
+      val whole = m.matched
+      val code = m.group(1)
+      val out =
+        try {
+          if (whole.charAt(1) == '#') {
+            val cp = if (whole.charAt(2) == 'x') Integer.parseInt(code.substring(1), 16)
+                     else Integer.parseInt(code)
+            new String(Character.toChars(cp))
+          } else Entities.name2codepoint.get(code) match {
+            case Some(cp) => new String(Character.toChars(cp))
+            case None => whole
+          }
+        } catch { case _: Exception => whole }
+      Regex.quoteReplacement(out)
+    })
 
   private def dropNested(text: String, open: String, close: String): String = {
     val openRe = Pattern.compile(open)

@@ -71,7 +71,17 @@ class WikiCleanOracleSpec extends AnyFunSuite {
       "[w a\u2029b]", "[w\u2028 a]", "[é a]", "[_ a]", "[w ]", "[[w a]", "[w [v b] c]", "[w a] [v b]",
       "[http://x.org/y label] [http://x.org/z]", "[w a\u000bb]",
       // escaped forms, unescaped twice before the tag step
-      "&lt;b&gt;x&lt;/b&gt;", "&amp;lt;i&amp;gt;y", "&lt;!-- c --&gt;z")
+      "&lt;b&gt;x&lt;/b&gt;", "&amp;lt;i&amp;gt;y", "&lt;!-- c --&gt;z",
+      // character references: forms, invalid numbers, ASCII-only names
+      "&#x41;&#X41;&#;&;&#65&#xZZ;", "&#9999999999;&#55296;&#0;", "&&amp;;&amp;amp;amp;", "&nbsp;&Nbsp;&_x;&é;",
+      "&#x;&#65;;&#a;&amp", "&#x1F600;&#128512;",
+      // runs of spaces and dots, punctuation-only lines
+      "a  b   c    ", " . .. ... .... .....", "\n.\n", "\n\n\n\n", "\n,;\n\n-\n", "x\n-\ny\n é \nz",
+      "a\r\n.\r\n", "\n\u2028\n", "\n_\n", "\n..\n..\n") ++
+      // unbalanced and overlapping template and table delimiters, alone and
+      // repeated (sizes the quadratic regex scan of the oracle still handles)
+      Seq("{{{", "}}}", "{|}", "{{}}}}{{{{", "x}}y{{z", "{{{x}}}", "{|x|}|}", "|}{|", "{{|}}")
+        .flatMap(s => Seq(s, s * 50, s * 400))
     assertMatchesOracle("adversarial cases", cases)
   }
 }

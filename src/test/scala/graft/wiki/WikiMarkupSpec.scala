@@ -346,4 +346,15 @@ class WikiMarkupSpec extends AnyFunSuite {
     assert(!cleaned.contains("3") && !cleaned.contains("%") &&
       !cleaned.contains("b+c"), cleaned)
   }
+
+  test("clean is linear on unbalanced delimiters: 1 MB of stray closes or unclosed opens") {
+    // a rescan to the next delimiter per consumed one is quadratic: minutes here
+    for (page <- Seq("}}" * 500000, "{{" * 500000, "|}" * 500000, "{|" * 500000)) {
+      val t0 = System.nanoTime()
+      val out = WikiMarkup.clean(page)
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(out == page, s"${page.take(2)}: unbalanced delimiters are kept")
+      assert(secs < 2.0, f"${page.take(2)} x 500000 took $secs%.2f s")
+    }
+  }
 }

@@ -115,28 +115,24 @@ class WikiPipelineSpec extends SparkSpec {
   }
 
   test("incubator mode selects lang subpages and rewrites titles") {
-    import spark.implicits._
     val pages = Seq(
       WikiPage("1", "Wp/enm/Middle Page", redirect = false, "text one"),
       WikiPage("2", "Wp/fr/Autre", redirect = false, "texte"),
       WikiPage("3", "Wp/enm", redirect = false, "too short"),
-      WikiPage("4", "Plain", redirect = false, "plain")).toDS()
-    val got = WikiPipeline.articles(pages, WikiPipeline.Config(incubator = Some("enm")))
-      .collect().toSeq
+      WikiPage("4", "Plain", redirect = false, "plain"))
+    val got = pages.flatMap(WikiPipeline.article(_, WikiPipeline.Config(incubator = Some("enm"))))
     assert(got.map(_.title) == Seq("Middle Page"))
   }
 
-  test("vital tags broadcast join keeps only listed titles with tags") {
-    import spark.implicits._
-    val pages = Seq(
-      WikiPage("1", "Keep Me", redirect = false, "body one"),
-      WikiPage("2", "Drop Me", redirect = false, "body two")).toDS()
-    val vital = Seq(("Keep Me", Seq("tag1", "tag2"))).toDF("title", "tags")
-    val out = WikiPipeline.toSentenceFormat(
-      WikiPipeline.withVitalTags(WikiPipeline.extract(WikiPipeline.articles(pages)), vital))
-    val rows = out.as[(String, String)].collect()
-    assert(rows.length == 1)
-    assert(rows.head._2 == "\nKeep Me:tag1|||tag2\nbody one\n")
+  test("vital tags keep only listed titles, one document per vital line") {
+    def record(id: String, title: String, body: String): String =
+      s"<page><title>$title</title><id>$id</id><text>$body</text>"
+    val vital = Map("Keep Me" -> Seq(Seq("tag1", "tag2"), Seq("again")))
+    val docs = Seq(record("1", "Keep Me", "body one"), record("2", "Drop Me", "body two"))
+      .flatMap(WikiPipeline.renderRecord(_, WikiPipeline.Config(), Some(vital), None))
+    assert(docs == Seq(
+      WikiPipeline.Doc("1", "\nKeep Me:tag1|||tag2\nbody one\n", 3),
+      WikiPipeline.Doc("1", "\nKeep Me:again\nbody one\n", 3)))
   }
 
   test("loadVitalTitles parses title|||tag lines like the reference loader") {
@@ -321,11 +317,8 @@ class WikiPipelineSpec extends SparkSpec {
   }
 
   test("doc format renders Tanl <doc> headers with reference URLs") {
-    import spark.implicits._
-    val pages = Seq(WikiPage("7", "Doc Title", redirect = false, "Body line")).toDS()
-    val out = WikiPipeline.toDocFormat(
-      WikiPipeline.extract(WikiPipeline.articles(pages)), "http://test.example.org/wiki")
-    val r = out.as[(String, String)].collect().head._2
+    val lines = WikiPipeline.extractLines("Body line", WikiPipeline.Config(), None)
+    val r = WikiPipeline.docFormat("7", "Doc Title", lines, "http://test.example.org/wiki")
     assert(r ==
       "<doc id=\"7\" url=\"http://test.example.org/wiki?curid=7\" title=\"Doc Title\">\nDoc Title\nBody line\n</doc>")
   }
@@ -340,5 +333,67 @@ class WikiPipelineSpec extends SparkSpec {
     // element after split is the final empty line the sink also produces)
     val expectedLines = expected.split("\n", -1).dropRight(1)
     assert(back.sorted.toSeq == expectedLines.sorted.toSeq)
+  }
+
+  /** Lines of the text files in `dir`, each read through the Hadoop codec
+    * its name selects (none for plain files).
+    */
+  private def outputLines(dir: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    Files.list(Paths.get(dir)).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filterNot(f => f.getFileName.toString.startsWith("_") || f.getFileName.toString.startsWith("."))
+      .flatMap { f =>
+        val raw = Files.newInputStream(f)
+        val in = Option(codecs.getCodec(new org.apache.hadoop.fs.Path(f.toString)))
+          .fold(raw: java.io.InputStream)(_.createInputStream(raw))
+        try new String(in.readAllBytes(), "UTF-8").split("\n", -1).dropRight(1).toSeq
+        finally in.close()
+      }
+  }
+
+  test("records split on </page> at every split size: each page exactly once") {
+    // the fixture's pages, copied with fresh ids until the file spans
+    // hundreds of 1-4 KB splits
+    val dump = new String(getClass.getResourceAsStream("/wiki_e2e_dump.xml").readAllBytes(), "UTF-8")
+    val head = dump.substring(0, dump.indexOf("  <page>"))
+    val body = dump.substring(dump.indexOf("  <page>"), dump.indexOf("</mediawiki>"))
+    val copies = 300
+    val text = head + (0 until copies).map(k => body.replaceAll("<id>(\\d+)</id>", s"<id>$k-$$1</id>"))
+      .mkString + "</mediawiki>\n"
+    val p = Files.createDirectories(Paths.get("target/tmp")).resolve("wiki_many_pages.xml")
+    Files.writeString(p, text)
+    val single = WikiXmlSource.records(spark, p.toString, maxSplitBytes = 1L << 30)
+    assert(single.getNumPartitions == 1)
+    val want = single.collect().toSeq.sorted
+    for (split <- Seq(1024L, 2500L, 4096L)) {
+      val rdd = WikiXmlSource.records(spark, p.toString, maxSplitBytes = split)
+      assert(rdd.getNumPartitions >= text.length / split)
+      val got = rdd.collect().toSeq
+      assert(got.sorted == want, s"split $split: ${got.size} records, ${want.size} in one split")
+      val ids = got.flatMap(WikiXmlSource.parsePage).map(_.id)
+      assert(ids.size == 5 * copies && ids.distinct.size == ids.size, s"split $split")
+    }
+  }
+
+  test("write(compress = true) reads back through the bzip2 codec to the plain write's lines") {
+    val rendered = WikiPipeline.run(spark, dumpPath)
+    WikiPipeline.write(rendered, "target/tmp/wiki_out_plain")
+    WikiPipeline.write(rendered, "target/tmp/wiki_out_bz2", compress = true)
+    val parts = Files.list(Paths.get("target/tmp/wiki_out_bz2")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filter(_.startsWith("part-"))
+    assert(parts.nonEmpty && parts.forall(_.endsWith(".bz2")), parts.toSeq)
+    val plain = outputLines("target/tmp/wiki_out_plain").sorted
+    assert(plain == expected.split("\n", -1).dropRight(1).toSeq.sorted)
+    assert(outputLines("target/tmp/wiki_out_bz2").sorted == plain)
+  }
+
+  test("WikiMain's line count is the written line count, without reading the output") {
+    for (compress <- Seq(false, true)) {
+      val out = s"target/tmp/wiki_main_out_$compress"
+      val n = WikiMain.writeCounted(spark, dumpPath, out, WikiPipeline.Config(), compress)
+      assert(n == spark.read.textFile(out).count(), s"compress=$compress")
+      assert(n == expected.count(_ == '\n'), s"compress=$compress")
+    }
   }
 }

@@ -33,7 +33,7 @@ object WikiPropertiesSpec extends Properties("WikiMarkup") {
       pre <- plainText; b <- block; post <- plainText
     } yield s"$pre $b $post"
     forAll(textWithBlocks) { t =>
-      val out = WikiMarkup.dropNested(t, "\\{\\{", "\\}\\}")
+      val out = WikiMarkup.dropNested(t, "{{", "}}")
       !out.contains("{{") && !out.contains("}}")
     }
   }
