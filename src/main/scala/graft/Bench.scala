@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query steady-state seconds.
@@ -31,9 +32,14 @@ import org.apache.spark.sql.SparkSession
   * tail capture (measured 2000 chars; the full line's 190 names alone are
   * ~3 KB, which is why BENCH_r01..r18 all recorded "parsed": null). The
   * compact line carries the top queries by wall plus per-tier totals —
-  * see the inline comment at its construction. The full {wall_s, cpu_s}
-  * detail is written to SPARK_GRAFT_DETAIL_OUT when set — the
+  * see the inline comment at its construction. The full detail — median
+  * and min wall seconds, median cpu seconds, and `"suspect": true` where
+  * median/min > 3 (one timed run stalled so hard that even the median is
+  * in doubt) — is written to SPARK_GRAFT_DETAIL_OUT when set, the
   * BENCH_LOCAL_r{N} recording path.
+  *
+  * A query that throws is left out of every number, named under
+  * `"failed"` in both JSON lines, and makes the run exit 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -55,8 +61,8 @@ object Bench {
         }
       })
 
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (wall, cpu) =
+    val timed = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val outcome =
         try {
           fn(spark, sfDir).count() // warmup: plan + codegen + IO caches
           val runs = Seq.fill(3) {
@@ -70,16 +76,27 @@ object Bench {
             org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
             (w, cpuNs.get / 1e9)
           }
-          (runs.map(_._1).sorted.apply(1), runs.map(_._2).sorted.apply(1))
-        } catch { case _: Throwable => (-1.0, -1.0) }
-      name -> ((wall, cpu))
+          Some(runs)
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e")
+            None
+        }
+      name -> outcome
+    }
+    val failed = timed.collect { case (k, None) => k }
+    val failedJson = failed.map(k => s""""$k"""").mkString(""","failed":[""", ",", "]")
+    // (median wall, min wall, median cpu) of every query that ran
+    val results = timed.collect { case (k, Some(runs)) =>
+      val walls = runs.map(_._1).sorted
+      k -> ((walls(1), walls.head, runs.map(_._2).sorted.apply(1)))
     }
     // millisecond precision: the driver parses this line from a BOUNDED
     // tail capture of the run log, and full double reprs pushed the
     // 68-query line past the capture window (round 9's artifact recorded
     // "parsed": null) — 3 decimals is below bench noise and ~40% shorter
-    val qs = results.map { case (k, (w, _)) => f""""$k":$w%.3f""" }.mkString("{", ",", "}")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
+    val qs = results.map { case (k, (w, _, _)) => f""""$k":$w%.3f""" }.mkString("{", ",", "}")
+    val total = results.map(_._2._1).sum
     // Host-load self-diagnosis: q03/q05 are stable, CI-plan-guarded queries
     // whose unloaded sf0.1 medians have been flat across rounds (~0.51 s /
     // ~0.52 s, the min over five recorded rounds). The ratio of this run's
@@ -91,9 +108,9 @@ object Bench {
     // cpu_s detail is the number to compare instead).
     val sentinelRefs = Map(
       "sf0.1" -> Map("q03_join_agg" -> 0.51, "q05_star_join" -> 0.52))
-    val measured = results.map { case (k, (w, _)) => k -> w }.toMap
+    val measured = results.toMap
     val loadFactor = sentinelRefs.get(new java.io.File(sfDir).getName)
-      .map(_.flatMap { case (q, ref) => measured.get(q).filter(_ > 0).map(_ / ref) }
+      .map(_.flatMap { case (q, ref) => measured.get(q).map(_._1 / ref) }
         .toSeq.sorted)
       .filter(_.nonEmpty)
       .map(rs => rs(rs.size / 2))
@@ -106,7 +123,7 @@ object Bench {
     val lf = loadFactor.map(v => f""","load_factor":$v%.2f""").getOrElse("") +
       (if (untrusted) ""","load_untrusted":true""" else "")
     val sfName = new java.io.File(sfDir).getName
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs$lf,"sf":"$sfName"}""")
+    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs$lf$failedJson,"sf":"$sfName"}""")
     // DRIVER-PARSEABLE compact line (optimization round 19): the full
     // per-query line above has outgrown the driver's bounded tail capture
     // (measured: the artifact stores the LAST 2000 chars of the run log,
@@ -124,31 +141,32 @@ object Bench {
     // above keeps every query name and its number, unchanged.
     val budget = 1600
     val header = f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":{"""
-    val tiers = results.filter(_._2._1 >= 0)
-      .groupBy(_._1.head).toSeq.sortBy(_._1)
+    val tiers = results.groupBy(_._1.head).toSeq.sortBy(_._1)
       .map { case (t, rs) => f""""tier_$t":${rs.map(_._2._1).sum}%.2f""" }
-    val tail = "}" + lf + s""","sf":"$sfName"}"""
+    val tail = "}" + lf + failedJson + s""","sf":"$sfName"}"""
     val fixed = header.length + tiers.map(_.length + 1).sum + tail.length
     val entries = scala.collection.mutable.ArrayBuffer[String]()
     var used = fixed
-    for ((k, (w, _)) <- results.filter(_._2._1 >= 0).sortBy(-_._2._1)) {
+    for ((k, (w, _, _)) <- results.sortBy(-_._2._1)) {
       val e = f""""$k":$w%.3f"""
       if (used + e.length + 1 <= budget) { entries += e; used += e.length + 1 }
     }
     val compact = header + (entries.sorted ++ tiers).mkString(",") + tail
     sys.env.get("SPARK_GRAFT_DETAIL_OUT").foreach { p =>
-      val body = results.map { case (k, (w, c)) =>
-        f""""$k":{"wall_s":$w%.3f,"cpu_s":$c%.3f}"""
+      val body = results.map { case (k, (w, wMin, c)) =>
+        val suspect = if (w > 3 * wMin) ""","suspect":true""" else ""
+        f""""$k":{"wall_s":$w%.3f,"wall_min_s":$wMin%.3f,"cpu_s":$c%.3f$suspect}"""
       }.mkString("{", ",", "}")
-      val cpuTotal = results.map(_._2._2).filter(_ >= 0).sum
+      val cpuTotal = results.map(_._2._3).sum
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
         f"""{"metric":"bench_detail","sf":"$sfName","cpus":$cpus,""" +
           f""""wall_total_s":$total%.2f,"cpu_total_s":$cpuTotal%.2f""" +
-          s"""$lf,"queries":$body}""" + "\n")
+          s"""$lf$failedJson,"queries":$body}""" + "\n")
       println(s"[bench] detail written to $p")
     }
     spark.stop()
     // last line of the run on purpose — see the compact-line comment above
     println(compact)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -126,7 +126,7 @@ object Containment {
     // pair set must exist before the shingle persist releases below
     // (the minhashCandidates discipline — pairs are the corpus's
     // duplicate structure, tiny next to the corpus itself)
-    val out = materialize.cutEager(verified, "containment-pairs")
+    val out = materialize.cutEager(verified, "containment-pairs").df
     persisted.release()
     out
   }

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.{Checkpointing, Materialize}
 
 /** Deduplication operators for LLM training-data pipelines.
   *
@@ -99,18 +100,16 @@ object Dedup extends DedupMinhash with DedupHamming with DedupNgram
     * checkpoint, so the two modes trade speed for recoverability. The
     * default `localCheckpoint` stores blocks unreplicated on executors —
     * fastest, but one executor lost mid-iteration (spot preemption,
-    * dynamic allocation) fails the job. Pass `checkpointDir` (an HDFS path
-    * at cluster scale) to spill each round's labels as parquet under that
-    * directory instead: rounds survive any executor loss, the requested
-    * directory is honored regardless of SparkContext checkpoint state, and
-    * each round's files are DELETED as soon as the next round supersedes
-    * them — only THIS run's final round files remain (they back the
-    * returned DataFrame; the caller owns deleting the directory once done
-    * with the result). Round paths carry a per-call unique prefix, so runs
-    * sharing a directory — sequential or concurrent — never touch each
-    * other's files; leftovers from an aborted run are likewise never
-    * reused or deleted. Long CC runs on preemptible clusters should
-    * always set it.
+    * dynamic allocation) fails the job. Pass
+    * `checkpointing = Materialize.Reliable(dir)` (an HDFS path at cluster
+    * scale) to spill each round's labels as parquet under that directory
+    * instead: rounds survive any executor loss, and each round's files are
+    * DELETED as soon as the next round supersedes them — only THIS run's
+    * final round files remain (they back the returned DataFrame; the
+    * caller owns deleting the directory once done with the result). Every
+    * cut has its own unique path (see [[graft.pipeline.Materialize]]), so
+    * runs sharing a directory never touch each other's files. Long CC runs
+    * on preemptible clusters should always set it.
     *
     * Small-graph fast path: a dup-edge set at or under `driverBound`
     * edges (default 2¹⁸ ≈ 262k — sized for the COLLECTED form, boxed Rows
@@ -124,17 +123,9 @@ object Dedup extends DedupMinhash with DedupHamming with DedupNgram
     * local DataFrame.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 32,
-                  checkpointDir: Option[String] = None,
+                  checkpointing: Checkpointing = Materialize.Local,
                   driverBound: Long = 1L << 18): DataFrame = {
     val spark = pairs.sparkSession
-    // per-call salt: two runs sharing a dir (sequential or concurrent)
-    // write disjoint round paths, so one run's cleanup can never delete
-    // files still lazily backing another run's returned frame; files left
-    // by an ABORTED run are deliberately not touched (they might be a
-    // live run's) — the caller owns the directory's lifecycle
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    def roundPath(dir: String, i: Int) =
-      new org.apache.hadoop.fs.Path(dir, s"cc-$salt-round-$i")
     val edges = pairs.select(col("a"), col("b"))
       .union(pairs.select(col("b").as("a"), col("a").as("b")))
       .distinct().cache()
@@ -174,47 +165,37 @@ object Dedup extends DedupMinhash with DedupHamming with DedupNgram
           org.apache.spark.sql.types.StructField("id", idType),
           org.apache.spark.sql.types.StructField("label", idType))))
     }
-    var labels = edges.select(col("a").as("id")).distinct()
+    val seed = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id")).cache()
+    var labels = new Materialize.Cut(seed, () => seed.unpersist())
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val viaEdges = edges.join(labels, edges("b") === labels("id"))
+      val l = labels.df
+      val viaEdges = edges.join(l, edges("b") === l("id"))
         .select(edges("a").as("id"), col("label"))
-      val hop = labels.select(col("id"), col("label")).union(viaEdges)
+      val hop = l.select(col("id"), col("label")).union(viaEdges)
         .groupBy("id").agg(min("label").as("label")).cache()
       val jumped = hop.alias("l")
         .join(hop.select(col("id").as("lid"), col("label").as("plabel")).alias("p"),
           col("l.label") === col("p.lid"), "left")
         .select(col("l.id").as("id"),
           least(col("l.label"), coalesce(col("p.plabel"), col("l.label"))).as("label"))
-      // eager, truncates lineage either way; reliable mode survives
-      // executor loss (see scaladoc)
-      val next = checkpointDir match {
-        case Some(dir) =>
-          jumped.write.mode("overwrite").parquet(roundPath(dir, iter).toString)
-          spark.read.parquet(roundPath(dir, iter).toString)
-        case None => jumped.localCheckpoint()
-      }
-      val changed = next.alias("n").join(labels.alias("l"), "id")
+      // eager, truncates lineage either way; Reliable survives executor
+      // loss (see scaladoc)
+      val next = checkpointing.cut(jumped, "cc-labels")
+      val changed = next.df.alias("n").join(l.alias("l"), "id")
         .filter(col("n.label") =!= col("l.label")).limit(1).count()
-      // the previous round's spill is unreferenced once `changed` is
-      // computed — delete it so the dir never holds more than two rounds
-      checkpointDir.foreach { dir =>
-        if (iter > 0) {
-          val prev = roundPath(dir, iter - 1)
-          val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(prev)) fs.delete(prev, true)
-        }
-      }
+      // the previous round is unreferenced once `changed` is computed —
+      // release it so the dir never holds more than two rounds
       hop.unpersist()
-      labels.unpersist()
+      labels.release()
       labels = next
       converged = changed == 0
       iter += 1
     }
     edges.unpersist()
-    labels
+    labels.df
   }
 
   /** Dup-cluster AUDIT — "what did dedup actually find": the cluster-size
@@ -229,9 +210,9 @@ object Dedup extends DedupMinhash with DedupHamming with DedupNgram
     * Returns (cluster_size, n_clusters, n_docs = size × clusters).
     */
   def dupClusterProfile(pairs: DataFrame, maxIter: Int = 32,
-                        checkpointDir: Option[String] = None,
+                        checkpointing: Checkpointing = Materialize.Local,
                         driverBound: Long = 1L << 18): DataFrame =
-    dupClusters(pairs, maxIter, checkpointDir, driverBound)
+    dupClusters(pairs, maxIter, checkpointing, driverBound)
       .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),

@@ -231,7 +231,7 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
       val r = bb.select(col(idCol).as("b"), col("band"), col("bucket"))
       val result = materialize.cutEager(
         l.join(r, Seq("band", "bucket")).filter(col("a") < col("b"))
-          .select("a", "b").distinct(), "minhash-pairs")
+          .select("a", "b").distinct(), "minhash-pairs").df
       persistedBb.release()
       return result
     }
@@ -291,7 +291,7 @@ private[graft] trait DedupMinhash { this: Dedup.type =>
     // ids-only pair list through parquet so the RETURNED frame survives
     // executor loss on preemptible fleets)
     val result = materialize.cutEager(
-      exhaustive.union(inner).union(stitch).distinct(), "minhash-pairs")
+      exhaustive.union(inner).union(stitch).distinct(), "minhash-pairs").df
     persistedMega.release(); persistedBb.release()
     result
   }

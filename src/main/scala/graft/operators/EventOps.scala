@@ -420,7 +420,7 @@ object EventOps {
     require(withinSeconds > 0, s"withinSeconds=$withinSeconds")
     val stepEvents = materialize.cut(
       df.filter(col(typeCol).isin(steps.distinct: _*))
-        .select(col(keyCol), col(typeCol), col(tsCol)), "funnel-steps")
+        .select(col(keyCol), col(typeCol), col(tsCol)), "funnel-steps").df
     val first = stepEvents.filter(col(typeCol) === steps.head)
       .groupBy(keyCol).agg(min(tsCol).as("t_1"))
     val chain = steps.tail.zipWithIndex.scanLeft(first) {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.pipeline.{Checkpointing, Materialize}
 
 /** HITS (Kleinberg 1999) hubs-and-authorities over a link graph — the
   * complement of [[PageRank]]'s single authority signal: a crawl
@@ -27,11 +28,10 @@ import org.apache.spark.storage.StorageLevel
   * so 2× an 8-byte-pair table, not 2× the corpus), and each iteration
   * shuffles only the (node, value) vector. Normalization totals are
   * broadcast 1-row aggregates INSIDE the plan, never driver collects;
-  * lineage cuts ride the pluggable [[Checkpointing]] strategy (Local
+  * lineage cuts ride the pluggable [[Checkpointing]] policy (Local
   * default; Reliable(dir) survives executor loss on preemptible
-  * fleets), EVERY iteration by default — unlike PageRank's
-  * every-3 discipline, each HITS half-step consumes its parent vector
-  * TWICE (the normalization total's broadcast job plus the join), so
+  * fleets), EVERY iteration: each HITS half-step consumes its parent
+  * vector TWICE (the normalization total's broadcast job plus the join), so
   * an uncut chain re-executes ancestors ~4^k times across k iterations
   * (measured: 48 s for 4 iterations on a 6k-node graph at every-3,
   * 2 s at every-1). The vector being materialized is (node, long) —
@@ -45,15 +45,11 @@ object Hits {
     * `src`/`dst`; multi-edges count multiply (pre-`distinct` for
     * simple-graph semantics). Returns
     * (node, hub_scaled, auth_scaled, hub, auth). Lineage is cut on each
-    * half-step's RAW aggregate every iteration (see core);
-    * `checkpointEvery` is kept for API compatibility — results never
-    * depended on it.
+    * half-step's RAW aggregate every iteration (see core).
     */
   def run(edges: DataFrame, iters: Int, scale: Double = 1e12,
-          checkpointEvery: Int = 1,
-          checkpointing: Checkpointing = Checkpointing.Local): DataFrame =
-    core(edges, iters, scale, checkpointEvery, checkpointing,
-      fixpoint = false)._1
+          checkpointing: Checkpointing = Materialize.Local): DataFrame =
+    core(edges, iters, scale, checkpointing, fixpoint = false)._1
 
   /** [[run]] that STOPS once a full iteration is a FIXPOINT of BOTH
     * vectors — hub and authority unchanged bit-for-bit on the scaled-
@@ -62,21 +58,19 @@ object Hits {
     * result equals `run(edges, k)` for ANY k >= the stop point —
     * spec-pinned). The PRODUCTION entry for real converging graphs;
     * fixed-iteration [[run]] remains for the unrolled g02 oracle.
-    * Cuts already happen every iteration here (see class doc) — the
-    * fixpoint variant alternates each vector between two slots so a cut
-    * never deletes the previous iteration's backing file under
-    * [[Checkpointing.Reliable]] before the comparison reads it. Returns
+    * Cuts already happen every iteration here (see class doc); the
+    * previous iteration's cuts are released only after the comparison
+    * reads them. Returns
     * (scores, iterations actually run — `maxIters` if never converged).
     */
   def runUntilFixpoint(edges: DataFrame, maxIters: Int,
                        scale: Double = 1e12,
-                       checkpointing: Checkpointing = Checkpointing.Local)
+                       checkpointing: Checkpointing = Materialize.Local)
       : (DataFrame, Int) =
-    core(edges, maxIters, scale, 1, checkpointing, fixpoint = true)
+    core(edges, maxIters, scale, checkpointing, fixpoint = true)
 
   private def core(edges: DataFrame, maxIters: Int, scale: Double,
-                   checkpointEvery: Int, checkpointing: Checkpointing,
-                   fixpoint: Boolean): (DataFrame, Int) = {
+                   checkpointing: Checkpointing, fixpoint: Boolean): (DataFrame, Int) = {
     require(maxIters >= 1)
     val spark = edges.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -108,8 +102,8 @@ object Hits {
 
     var h = nodes.withColumn("h_s", lit(math.round(scale / n)))
     var a: DataFrame = null
-    var prevAraw: DataFrame = null
-    var prevHraw: DataFrame = null
+    var prevAraw: Materialize.Cut = null
+    var prevHraw: Materialize.Cut = null
     var itersUsed = maxIters
     var i = 1
     var done = false
@@ -123,18 +117,17 @@ object Hits {
       // iteration). The raw skeleton is as small as the vector, and every
       // downstream read (the total, the nodes left-join, the next
       // half-step, the fixpoint compare) now reads a materialized frame.
-      // Alternating slots in fixpoint mode keep the previous round's file
-      // alive under Reliable for the comparison below.
+      // The previous round's cuts stay live until the comparison below.
       val araw = checkpointing.cut(
         h.join(eSrc, h("node") === col("e_src"))
           .groupBy(col("e_dst").as("node")).agg(sum(col("h_s")).as("raw")),
-        if (fixpoint) s"ar${i % 2}" else "ar")
-      a = normalized(araw, "a_s")
+        "hits-auth")
+      a = normalized(araw.df, "a_s")
       val hraw = checkpointing.cut(
         a.join(eDst, a("node") === col("f_dst"))
           .groupBy(col("f_src").as("node")).agg(sum(col("a_s")).as("raw")),
-        if (fixpoint) s"hr${i % 2}" else "hr")
-      h = normalized(hraw, "h_s")
+        "hits-hub")
+      h = normalized(hraw.df, "h_s")
       if (fixpoint) {
         // exact integer fixpoint over the two materialized RAW skeletons:
         // normalization is a deterministic function of the raw vector
@@ -151,28 +144,30 @@ object Hits {
         // into a single isEmpty probe; this was 4 driver actions per
         // fixpoint iteration, now 1).
         if (prevAraw != null && {
-          val aMis = araw
-            .join(prevAraw.withColumnRenamed("raw", "__p"), Seq("node"))
+          val aMis = araw.df
+            .join(prevAraw.df.withColumnRenamed("raw", "__p"), Seq("node"))
             .filter(col("raw") =!= col("__p")).select(lit(1).as("__m"))
-          val hMis = hraw
-            .join(prevHraw.withColumnRenamed("raw", "__p"), Seq("node"))
+          val hMis = hraw.df
+            .join(prevHraw.df.withColumnRenamed("raw", "__p"), Seq("node"))
             .filter(col("raw") =!= col("__p")).select(lit(1).as("__m"))
           aMis.union(hMis).isEmpty
         }) {
           itersUsed = i; done = true
         }
-        prevAraw = araw; prevHraw = hraw
       }
+      if (prevAraw != null) { prevAraw.release(); prevHraw.release() }
+      prevAraw = araw; prevHraw = hraw
       i += 1
     }
-    val out = checkpointing.cutFinal(
+    val out = checkpointing.cut(
       h.join(a, Seq("node"))
         .select(col("node"), col("h_s").as("hub_scaled"),
           col("a_s").as("auth_scaled"),
           (col("h_s") / lit(scale)).as("hub"),
           (col("a_s") / lit(scale)).as("auth")),
-      "out")
+      "hits-out")
+    prevAraw.release(); prevHraw.release()
     eSrc.unpersist(); eDst.unpersist(); nodes.unpersist()
-    (out, itersUsed)
+    (out.df, itersUsed)
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.pipeline.{Checkpointing, Materialize}
 
 /** k-CORE membership over an undirected simple graph — the robustness
   * complement of the other graph signals: a node's PageRank can be
@@ -28,7 +28,7 @@ object KCore {
   /** Nodes of the k-core, with their WITHIN-CORE degree. */
   def membership(edges: DataFrame, k: Int,
                  maxRounds: Int = 64,
-                 checkpointing: Checkpointing = Checkpointing.Local)
+                 checkpointing: Checkpointing = Materialize.Local)
       : DataFrame = {
     require(k >= 1, s"k=$k")
     require(maxRounds >= 1, s"maxRounds=$maxRounds")
@@ -37,26 +37,26 @@ object KCore {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    var und = checkpointing.cut(und0, "edges")
-    // carried forward: under Reliable the PREVIOUS round's backing file
-    // is deleted as soon as the next cut lands, so the old frame must
-    // never be re-counted after the cut
-    var prevCount = und.count()
+    var und = checkpointing.cut(und0, "kcore-edges")
+    // carried forward: the previous round's cut is released as soon as
+    // the next one lands, so its frame is never re-counted
+    var prevCount = und.df.count()
     var round = 0
     var stable = false
     while (round < maxRounds && !stable) {
-      val deg = und.select(col("a").as("node"))
-        .union(und.select(col("b").as("node")))
+      val deg = und.df.select(col("a").as("node"))
+        .union(und.df.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("node")
       val next = checkpointing.cut(
-        und.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+        und.df.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
           .select("a", "b"),
-        "edges")
+        "kcore-edges")
+      und.release()
       // fixpoint probe: the edge count is monotone non-increasing, so
       // equality means no node fell below k this round
-      val n = next.count()
+      val n = next.df.count()
       stable = n == prevCount
       prevCount = n
       und = next
@@ -64,13 +64,17 @@ object KCore {
     }
     // an unconverged result is NOT the k-core — fail loudly (adversarial
     // chains peel one layer per round; the caller raises maxRounds)
-    if (!stable) throw new IllegalStateException(
-      s"KCore.membership: no fixpoint after $maxRounds rounds — " +
-        "raise maxRounds")
-    checkpointing.cutFinal(
-      und.select(col("a").as("node"))
-        .union(und.select(col("b").as("node")))
+    if (!stable) {
+      und.release()
+      throw new IllegalStateException(s"KCore.membership: no fixpoint " +
+        s"after $maxRounds rounds — raise maxRounds")
+    }
+    val out = checkpointing.cut(
+      und.df.select(col("a").as("node"))
+        .union(und.df.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("core_deg")),
-      "out")
+      "kcore-out")
+    und.release()
+    out.df
   }
 }

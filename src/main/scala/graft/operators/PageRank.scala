@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.pipeline.{Checkpointing, Materialize}
 
 /** PageRank over a link graph — the crawl-side authority signal the
   * public curation pipelines use for host-level quality ranking (the
@@ -30,13 +31,12 @@ import org.apache.spark.storage.StorageLevel
   * a broadcast 1-row aggregate INSIDE the plan — a driver collect per
   * iteration would re-execute the rank lineage back to the last
   * checkpoint every iteration. Lineage is cut EVERY iteration via the
-  * pluggable [[Checkpointing]] strategy — Local (default) for stable
+  * pluggable [[Checkpointing]] policy — Local (default) for stable
   * executors, Reliable(dir) on a preemptible fleet where a long run must
   * survive executor loss — so plan depth stays constant at any iteration
   * count, and because the vector is consumed twice per iteration (the
   * dangling broadcast's job plus the next cut), an uncut chain would
-  * re-execute ancestors ~2^k across k iterations (`checkpointEvery` is
-  * kept for API compatibility; results never depended on it).
+  * re-execute ancestors ~2^k across k iterations.
   */
 object PageRank {
 
@@ -46,10 +46,9 @@ object PageRank {
     * (node, rank_scaled, rank).
     */
   def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
-          scale: Double = 1e12, checkpointEvery: Int = 3,
-          checkpointing: Checkpointing = Checkpointing.Local): DataFrame =
-    core(edges, iters, damping, scale, checkpointEvery, checkpointing,
-      fixpoint = false)._1
+          scale: Double = 1e12,
+          checkpointing: Checkpointing = Materialize.Local): DataFrame =
+    core(edges, iters, damping, scale, checkpointing, fixpoint = false)._1
 
   /** [[run]] that STOPS once a full iteration is a FIXPOINT — the
     * scaled-integer grid makes "vector unchanged" an EXACT comparison
@@ -63,22 +62,21 @@ object PageRank {
     *
     * Mechanics: every iteration's vector is cut (the vector is a
     * (node, long) skeleton — cutting it beats re-executing a half-step,
-    * the [[Hits]] every-1 measurement), alternating between two slots so
-    * a cut never deletes the PREVIOUS iteration's backing file under
-    * [[Checkpointing.Reliable]] before the comparison reads it; the
+    * the [[Hits]] every-1 measurement), and the previous iteration's cut
+    * is released only after the comparison reads it; the
     * comparison joins two materialized skeletons and short-circuits
     * (isEmpty). Returns (ranks, iterations actually run — `maxIters` if
     * no fixpoint was reached).
     */
   def runUntilFixpoint(edges: DataFrame, maxIters: Int,
                        damping: Double = 0.85, scale: Double = 1e12,
-                       checkpointing: Checkpointing = Checkpointing.Local)
+                       checkpointing: Checkpointing = Materialize.Local)
       : (DataFrame, Int) =
-    core(edges, maxIters, damping, scale, 1, checkpointing, fixpoint = true)
+    core(edges, maxIters, damping, scale, checkpointing, fixpoint = true)
 
   private def core(edges: DataFrame, maxIters: Int, damping: Double,
-                   scale: Double, checkpointEvery: Int,
-                   checkpointing: Checkpointing, fixpoint: Boolean)
+                   scale: Double, checkpointing: Checkpointing,
+                   fixpoint: Boolean)
       : (DataFrame, Int) = {
     require(maxIters >= 1 && damping > 0 && damping < 1)
     val spark = edges.sparkSession
@@ -109,8 +107,7 @@ object PageRank {
         "left_anti")
       .persist(StorageLevel.DISK_ONLY)
     var ranks = checkpointing.cut(
-      nodes.withColumn("rank_s", lit(math.round(scale / n))), "r0")
-    var prev: DataFrame = null
+      nodes.withColumn("rank_s", lit(math.round(scale / n))), "pr-rank")
     var itersUsed = maxIters
     var i = 1
     var done = false
@@ -119,12 +116,13 @@ object PageRank {
       // uniform pool — kept as a broadcast 1-row frame, NOT a driver
       // collect; the semi-join reads the materialized vector, value-
       // identical to the former left-join + outdeg IS NULL filter
-      val dangRow = ranks.join(dangNodes, Seq("node"), "left_semi")
+      val prev = ranks.df
+      val dangRow = prev.join(dangNodes, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("rank_s")), lit(0L)).as("__dang"))
       // linked nodes split their rank across outlinks, each share
       // rounded to the integer grid before the exact sum (inner join ≡
       // the former left-join + outdeg IS NOT NULL filter)
-      val contribs = ranks.join(outdeg, ranks("node") === outdeg("src"))
+      val contribs = prev.join(outdeg, prev("node") === outdeg("src"))
         .select(col("node"),
           round(col("rank_s") / col("outdeg")).cast("long").as("c"))
         .join(e, col("node") === e("src"))
@@ -144,33 +142,32 @@ object PageRank {
       // the Hits every-1 measurement, now structural here too. The
       // materialized frame is a (node, long) skeleton: at any corpus
       // scale, one cut is cheaper than one chain re-execution.
-      val cut = checkpointing.cut(updated, s"fp${i % 2}")
-      if (fixpoint) {
-        // exact integer fixpoint test over two MATERIALIZED skeletons
-        // (the node set is constant — nodes left-join — so the inner
-        // join covers the whole vector)
-        if (prev != null && cut
-              .join(prev.withColumnRenamed("rank_s", "__p"), Seq("node"))
-              .filter(col("rank_s") =!= col("__p")).isEmpty) {
-          itersUsed = i; done = true
-        }
-        prev = cut
+      val cut = checkpointing.cut(updated, "pr-rank")
+      // exact integer fixpoint test over two MATERIALIZED skeletons
+      // (the node set is constant — nodes left-join — so the inner
+      // join covers the whole vector)
+      if (fixpoint && i > 1 && cut.df
+            .join(prev.withColumnRenamed("rank_s", "__p"), Seq("node"))
+            .filter(col("rank_s") =!= col("__p")).isEmpty) {
+        itersUsed = i; done = true
       }
+      ranks.release()
       ranks = cut
       i += 1
     }
-    // materialize the final vector, then release the iteration scaffolding
-    // (edges/outdeg/nodes) — without this every run leaks three persisted
-    // frames into the CacheManager. The final cut follows the same
-    // strategy: under Reliable the returned frame is file-backed, so a
-    // post-return executor loss can never invalidate it.
-    val out = checkpointing.cutFinal(
-      ranks.select(col("node"), col("rank_s").as("rank_scaled"),
+    // materialize the final vector, then release the last round and the
+    // iteration scaffolding (edges/outdeg/nodes) — without this every run
+    // leaks three persisted frames into the CacheManager. The final cut
+    // follows the same policy: under Reliable the returned frame is
+    // file-backed, so a post-return executor loss can never invalidate it.
+    val out = checkpointing.cut(
+      ranks.df.select(col("node"), col("rank_s").as("rank_scaled"),
         (col("rank_s") / lit(scale)).as("rank")),
-      "out")
+      "pr-out")
+    ranks.release()
     e.unpersist(); outdeg.unpersist(); nodes.unpersist()
     dangNodes.unpersist()
-    (out, itersUsed)
+    (out.df, itersUsed)
   }
 
   /** PERSONALIZED PageRank: the teleport vector concentrates on `seeds`
@@ -192,8 +189,7 @@ object PageRank {
     */
   def personalized(edges: DataFrame, seeds: DataFrame, iters: Int,
                    damping: Double = 0.85, scale: Double = 1e12,
-                   checkpointEvery: Int = 3,
-                   checkpointing: Checkpointing = Checkpointing.Local)
+                   checkpointing: Checkpointing = Materialize.Local)
       : DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
     val spark = edges.sparkSession
@@ -225,11 +221,12 @@ object PageRank {
           when(col("__seed").isNotNull, lit(math.round(scale / nSeeds)))
             .otherwise(lit(0L)))
         .select(col("node"), col("rank_s")),
-      "r0")
-    for (i <- 1 to iters) {
-      val dangRow = ranks.join(dangNodes, Seq("node"), "left_semi")
+      "pr-rank")
+    for (_ <- 1 to iters) {
+      val prev = ranks.df
+      val dangRow = prev.join(dangNodes, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("rank_s")), lit(0L)).as("__dang"))
-      val contribs = ranks.join(outdeg, ranks("node") === outdeg("src"))
+      val contribs = prev.join(outdeg, prev("node") === outdeg("src"))
         .select(col("node"),
           round(col("rank_s") / col("outdeg")).cast("long").as("c"))
         .join(e, col("node") === e("src"))
@@ -246,14 +243,17 @@ object PageRank {
             .otherwise(lit(damping) * coalesce(col("in_c"), lit(0L))))
           .cast("long"))
         .select(col("node"), col("rank_s"))
-      ranks = checkpointing.cut(updated, s"fp${i % 2}")
+      val cut = checkpointing.cut(updated, "pr-rank")
+      ranks.release()
+      ranks = cut
     }
-    val out = checkpointing.cutFinal(
-      ranks.select(col("node"), col("rank_s").as("rank_scaled"),
+    val out = checkpointing.cut(
+      ranks.df.select(col("node"), col("rank_s").as("rank_scaled"),
         (col("rank_s") / lit(scale)).as("rank")),
-      "out")
+      "pr-out")
+    ranks.release()
     e.unpersist(); outdeg.unpersist(); nodes.unpersist(); sd.unpersist()
     dangNodes.unpersist()
-    out
+    out.df
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.pipeline.{Checkpointing, Materialize}
 
 /** Bounded-hop BFS reachability over a link graph — the crawl question
   * PageRank and HITS don't answer: "which pages are WITHIN k clicks of
@@ -17,9 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * graph. The edge table is the big side and never moves — partitioned
   * once on `src` and persisted, each round shuffles only (node, hops)
   * skeletons (the PageRank discipline). Rounds cut lineage through the
-  * pluggable [[Checkpointing]] (two slots — frontier and visited — so
-  * one vector's cut never deletes the other's backing file, the Hits
-  * convention), and the loop EXITS EARLY when a frontier drains: on a
+  * pluggable [[Checkpointing]] (frontier and visited are cut apart, and
+  * each cut is released once the next round replaces it; the last
+  * visited cut IS the result), and the loop EXITS EARLY when a frontier
+  * drains: on a
   * graph with diameter d, maxHops = 20 costs min(d, 20) rounds, and the
   * per-round `count()` action doubles as the frontier materialization
   * the next join needs anyway.
@@ -32,7 +34,7 @@ object Reachability {
     * @return (node, hops) — minimum hops from any seed, seeds at 0
     */
   def bounded(edges: DataFrame, sources: DataFrame, maxHops: Int,
-              checkpointing: Checkpointing = Checkpointing.Local)
+              checkpointing: Checkpointing = Materialize.Local)
       : DataFrame = {
     require(maxHops >= 0, s"maxHops=$maxHops")
     val spark = edges.sparkSession
@@ -41,26 +43,35 @@ object Reachability {
       .repartition(parts, col("src"))
       .persist(StorageLevel.DISK_ONLY)
     var visited = checkpointing.cut(
-      sources.select(col("node"), lit(0L).as("hops")).distinct(), "visited")
+      sources.select(col("node"), lit(0L).as("hops")).distinct(),
+      "reach-visited")
+    // the seeds are both the first visited set and the first frontier
     var frontier = visited
     var h = 1L
-    var drained = frontier.isEmpty
+    var drained = frontier.df.isEmpty
     while (h <= maxHops && !drained) {
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
+      val next = frontier.df
+        .join(e, frontier.df("node") === e("src"))
         .select(e("dst").as("node"))
         .distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
+        .join(visited.df.select("node"), Seq("node"), "left_anti")
         .withColumn("hops", lit(h))
       // the cut materializes the frontier: the emptiness probe and the
       // next round's two joins then all read the cut blocks, not the
       // join lineage
-      frontier = checkpointing.cut(next, "frontier")
-      drained = frontier.isEmpty
-      if (!drained)
-        visited = checkpointing.cut(visited.unionByName(frontier), "visited")
+      val cut = checkpointing.cut(next, "reach-frontier")
+      if (frontier ne visited) frontier.release()
+      frontier = cut
+      drained = frontier.df.isEmpty
+      if (!drained) {
+        val v = checkpointing.cut(visited.df.unionByName(frontier.df),
+          "reach-visited")
+        visited.release(); visited = v
+      }
       h += 1
     }
-    checkpointing.cutFinal(visited, "visited")
+    if (frontier ne visited) frontier.release()
+    e.unpersist()
+    visited.df
   }
 }

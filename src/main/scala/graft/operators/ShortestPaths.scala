@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.pipeline.{Checkpointing, Materialize}
 
 /** Weighted single-source shortest paths — the distance complement of
   * [[Reachability]] ("how CHEAP is the best route", not just "within k
@@ -19,9 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * Bellman–Ford usable at scale), and the edge table never moves —
   * partitioned once on `src` and persisted, each round shuffles only
   * (node, dist) skeletons. Rounds cut lineage through the pluggable
-  * [[Checkpointing]] on alternating slots (dist and frontier are both
-  * live across a round; a slot's cut never deletes the other's backing
-  * file — the Hits convention).
+  * [[Checkpointing]]; a round's dist and frontier cuts are both live
+  * across the next round and released once it has replaced them.
   *
   * `maxRounds` bounds the hop length of considered paths: after R
   * rounds the result holds the exact shortest distance among paths of
@@ -40,7 +40,7 @@ object ShortestPaths {
     *         and the number of rounds actually run)
     */
   def run(edges: DataFrame, sources: DataFrame, maxRounds: Int,
-          checkpointing: Checkpointing = Checkpointing.Local)
+          checkpointing: Checkpointing = Materialize.Local)
       : (DataFrame, Int) = {
     require(maxRounds >= 0, s"maxRounds=$maxRounds")
     val spark = edges.sparkSession
@@ -49,10 +49,12 @@ object ShortestPaths {
       .select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .repartition(parts, col("src"))
       .persist(StorageLevel.DISK_ONLY)
-    var dist = checkpointing.cut(
-      sources.select(col("node"), lit(0L).as("dist")).distinct(), "d0")
+    val seeds = checkpointing.cut(
+      sources.select(col("node"), lit(0L).as("dist")).distinct(), "sp-dist")
     // the frontier starts as all seeds (every seed "improved" at round 0)
-    var frontier = dist
+    var live = Seq(seeds)
+    var dist = seeds.df
+    var frontier = seeds.df
     var rounds = 0
     var i = 1
     var drained = frontier.isEmpty
@@ -70,19 +72,23 @@ object ShortestPaths {
             col("__cand")).otherwise(col("dist")).as("dist"),
           (col("dist").isNull || col("__cand") < col("dist"))
             .as("__improved"))
-      val cut = checkpointing.cut(merged, s"d${i % 2}")
-      frontier = checkpointing.cut(
-        cut.filter(col("__improved")).select(col("node"), col("dist")),
-        s"f${i % 2}")
-      dist = cut.select(col("node"), col("dist"))
+      val cut = checkpointing.cut(merged, "sp-dist")
+      val next = checkpointing.cut(
+        cut.df.filter(col("__improved")).select(col("node"), col("dist")),
+        "sp-frontier")
+      live.foreach(_.release())
+      live = Seq(cut, next)
+      frontier = next.df
+      dist = cut.df.select(col("node"), col("dist"))
       rounds = i
       // an empty frontier is the exact fixpoint: nothing improved, so no
       // further round can improve anything (non-negative weights)
       drained = frontier.isEmpty
       i += 1
     }
-    val out = checkpointing.cutFinal(dist, "out")
+    val out = checkpointing.cut(dist, "sp-out")
+    live.foreach(_.release())
     e.unpersist()
-    (out, rounds)
+    (out.df, rounds)
   }
 }

@@ -1,85 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.storage.StorageLevel
 import graft.dedup.Dedup
 import graft.text.TextOps
-
-/** How `curate` materializes an intermediate survivor set that fans out
-  * into multiple downstream reads. The tradeoff is recompute cost vs
-  * fault tolerance at cluster scale:
-  *
-  *  - [[Materialize.Off]]: no materialization. Within a SINGLE action
-  *    Spark already dedupes identical subplans via exchange reuse, so this
-  *    is often free for simple fan-outs — but branches that prune
-  *    different columns (near-dedup's signature vs gram vs anti-join
-  *    reads) plan different exchanges and recompute the full upstream.
-  *  - [[Materialize.Local]]: eager `localCheckpoint` — fastest, but blocks
-  *    live unreplicated on executors with lineage truncated: one lost
-  *    executor (spot preemption, dynamic allocation) makes the job
-  *    unrecoverable. Single-machine / short-job use only.
-  *  - [[Materialize.Disk]] (default): DISK_ONLY persist of the internal
-  *    rows with lineage KEPT — a block lost with its executor is
-  *    recomputed from lineage instead of failing the job. The cluster-safe
-  *    default.
-  *  - [[Materialize.Reliable]]: spill the survivor set as parquet under
-  *    the given (HDFS at scale) directory and read it back — survives
-  *    executor loss without any recompute, and honors the requested
-  *    directory regardless of any SparkContext checkpoint state. The
-  *    spill files back the returned frame, so the caller owns deleting
-  *    the directory after the run.
-  */
-sealed trait Materialize {
-  import org.apache.spark.sql.DataFrame
-
-  /** Apply this strategy to an intermediate that fans out into multiple
-    * downstream reads. Reliable spill paths are salted per call, so two
-    * runs sharing a dir never overwrite the files still lazily backing
-    * an earlier frame.
-    */
-  private[graft] def cut(df: DataFrame, tag: String): DataFrame = this match {
-    case Materialize.Off => df
-    case Materialize.Local =>
-      graft.plans.PlanTap.record(s"cut:$tag", df)
-      df.localCheckpoint()
-    case Materialize.Disk =>
-      graft.plans.PlanTap.record(s"cut:$tag", df)
-      org.apache.spark.sql.graftbridge.Bridge.persistedCopy(df,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY).df
-    case Materialize.Reliable(dir) =>
-      graft.plans.PlanTap.record(s"cut:$tag", df)
-      val path = s"$dir/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
-      df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path)
-  }
-
-  /** [[cut]] for operators whose semantics REQUIRE materialization
-    * before return — a snapshot taken before registries append, or a
-    * result whose upstream persists are released on return. Off upgrades
-    * to Local (a lazy frame would re-read post-append registry state or
-    * recompute released skeletons), and Disk's lazy persist is forced so
-    * the blocks exist before any release runs.
-    */
-  private[graft] def cutEager(df: DataFrame, tag: String): DataFrame =
-    this match {
-      case Materialize.Off =>
-        graft.plans.PlanTap.record(s"cutEager:$tag", df)
-        df.localCheckpoint()
-      case Materialize.Disk =>
-        val out = cut(df, tag)
-        out.count()
-        out
-      case _ => cut(df, tag)
-    }
-}
-object Materialize {
-  case object Off extends Materialize
-  case object Local extends Materialize
-  case object Disk extends Materialize
-  final case class Reliable(dir: String) extends Materialize
-}
 
 /** The end-to-end training-corpus curation flow, composed from the
   * library's operators in the order a real pipeline runs them — cheap
@@ -368,15 +292,19 @@ object CorpusPipeline {
   def curate(docs: DataFrame, textCol: String, idCol: String,
              cfg: Config = Config(),
              benchmark: Option[DataFrame] = None): DataFrame =
-    curateTapped(docs, textCol, idCol, cfg, benchmark, (_, _) => ())
+    curateTapped(docs, textCol, idCol, cfg, benchmark, (_, _) => (),
+      keepStages = false)
 
   /** [[curate]] with a passive per-stage observer: `tap(stageName,
     * survivors)` fires at each DROP stage's output, in pipeline order.
-    * The tap never changes dataflow — [[curateAudit]] is the consumer.
+    * The tap never changes dataflow — [[curateAudit]] is the consumer,
+    * and it sets `keepStages` because it re-reads every stage's frame
+    * after the run.
     */
   private def curateTapped(docs: DataFrame, textCol: String, idCol: String,
                            cfg: Config, benchmark: Option[DataFrame],
-                           tap: (String, DataFrame) => Unit): DataFrame = {
+                           tap: (String, DataFrame) => Unit,
+                           keepStages: Boolean): DataFrame = {
     // config validation FIRST — before the compaction hook and the eager
     // registry/index appends inside the stages: a misconfigured run must
     // fail before it mutates any cross-run state (a batch registered but
@@ -482,12 +410,24 @@ object CorpusPipeline {
     tap("line_shape", lineGated)
 
     // Applied only where a stage genuinely fans out into multiple
-    // downstream reads; see Materialize for the strategy tradeoffs
-    // (cut() salts Reliable spill paths per call, so concurrent runs
-    // sharing a dir never clobber each other's backing files; the
-    // caller still owns deleting the dir when done).
+    // downstream reads; see Materialize for the policy tradeoffs. Every
+    // stage reads only the nearest cut upstream of it, so once a
+    // lineage-truncating cut is written the previous one backs nothing
+    // curate returns and is released (under Reliable the dir then holds
+    // only the returned frame's files). A Disk copy is lazy — the next
+    // copy still reads it at the caller's action — so it is left to the
+    // ContextCleaner.
+    val releaseSuperseded =
+      !keepStages && cfg.materialize.isInstanceOf[Checkpointing]
+    var lastCut: Option[Materialize.Cut] = None
     def materialize(df: DataFrame, branches: Int): DataFrame =
-      if (branches <= 1) df else cfg.materialize.cut(df, "curate-spill")
+      if (branches <= 1) df
+      else {
+        val c = cfg.materialize.cut(df, "curate-spill")
+        if (releaseSuperseded) lastCut.foreach(_.release())
+        lastCut = Some(c)
+        c.df
+      }
 
     val nearDedupOn = cfg.nearDupThreshold <= 1.0
     val nearIndexOn = cfg.nearIndexTable.isDefined
@@ -696,7 +636,7 @@ object CorpusPipeline {
       (name, df) => {
         if (!(df eq last)) stages += name -> df
         last = df
-      })
+      }, keepStages = true)
     val kept = out.select(col(idCol)).withColumn("__kept", lit(true))
     var acc = docs.select(col(idCol))
       .withColumn("verdict", lit(null).cast("string"))

@@ -175,7 +175,7 @@ object CrawlPipeline {
     // identical 0.27 cpu-s single-task extraction jobs per run at sf0.1).
     val cand =
       if (updateRegistries && citationRegistryTable.isDefined)
-        materialize.cut(cand0, "frontier-cand")
+        materialize.cut(cand0, "frontier-cand").df
       else cand0
     val withTotal = citationRegistryTable match {
       case Some(t) =>
@@ -231,7 +231,7 @@ object CrawlPipeline {
       .select(col("url"), col("host"), col("n_refs"), col("n_refs_total"),
         col("crawl_delay"), col("fetch_seq"), col("not_before_s"),
         col("content_hash"))
-    val schedSnap = materialize.cutEager(sched, "frontier-schedule")
+    val schedSnap = materialize.cutEager(sched, "frontier-schedule").df
     if (updateRegistries) {
       // the two appends touch DIFFERENT tables and read only already-
       // materialized snapshots (cand, schedSnap) — independent jobs, so

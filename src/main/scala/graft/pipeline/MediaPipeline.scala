@@ -98,7 +98,7 @@ object MediaPipeline {
     val gated = probed.filter(gateCondition(cfg))
     // the ONE decode pass; every tier below reads phash from the row
     val hashed = cfg.materialize.cut(Multimodal.perceptualHash(gated),
-      "curate-media")
+      "curate-media").df
     val ph = Some("phash")
     val withinRun = Multimodal.dedupePerceptual(hashed, cfg.maxHamming, ph)
     val afterRegistry = cfg.registryTable match {

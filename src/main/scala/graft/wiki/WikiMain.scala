@@ -36,47 +36,55 @@ object WikiMain {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    var infn = ""
-    var out = "wiki_out"
-    var incubator: Option[String] = None
-    var vitalfn: Option[String] = None
-    var compress = false
-    var keepLinks = false
-    var structure = false
-    var expandTemplates = false
-    var templateBestEffort = false
-    var i = 0
-    while (i < args.length) {
-      args(i) match {
-        case "--infn" => infn = args(i + 1); i += 2
-        case "--out" => out = args(i + 1); i += 2
-        case "--incubator" => incubator = Some(args(i + 1)); i += 2
-        case "--vitalfn" => vitalfn = Some(args(i + 1)); i += 2
-        case "--compress" => compress = true; i += 1
-        case "--keep-links" => keepLinks = true; i += 1
-        case "--structure" => structure = true; i += 1
-        case "--expand-templates" => expandTemplates = true; i += 1
-        case "--expand-templates=best-effort" =>
-          expandTemplates = true; templateBestEffort = true; i += 1
-        case other => sys.error(s"unknown argument: $other")
+  /** What the command line asks for. */
+  final case class Args(infn: String = "", out: String = "wiki_out",
+                        cfg: WikiPipeline.Config = WikiPipeline.Config(),
+                        compress: Boolean = false)
+
+  private val valueFlags = Set("--infn", "--out", "--incubator", "--vitalfn")
+
+  /** Parses the command line, or returns the usage error to print. */
+  def parseArgs(args: List[String]): Either[String, Args] = {
+    @annotation.tailrec
+    def go(rest: List[String], a: Args): Either[String, Args] = {
+      def cfg(f: WikiPipeline.Config => WikiPipeline.Config) =
+        a.copy(cfg = f(a.cfg))
+      rest match {
+        case Nil if a.infn.isEmpty =>
+          Left("Please include --infn FILENAME in your command.")
+        case Nil => Right(a)
+        case flag :: Nil if valueFlags(flag) => Left(s"$flag needs a value")
+        case "--infn" :: v :: t => go(t, a.copy(infn = v))
+        case "--out" :: v :: t => go(t, a.copy(out = v))
+        case "--incubator" :: v :: t => go(t, cfg(_.copy(incubator = Some(v))))
+        case "--vitalfn" :: v :: t => go(t, cfg(_.copy(vitalFn = Some(v))))
+        case "--compress" :: t => go(t, a.copy(compress = true))
+        case "--keep-links" :: t => go(t, cfg(_.copy(keepLinks = true)))
+        case "--structure" :: t => go(t, cfg(_.copy(structure = true)))
+        case "--expand-templates" :: t =>
+          go(t, cfg(_.copy(expandTemplates = true)))
+        case "--expand-templates=best-effort" :: t =>
+          go(t, cfg(_.copy(expandTemplates = true,
+            templateOverflow = WikiPipeline.TemplateOverflow.BestEffort)))
+        case other :: _ => Left(s"unknown argument: $other")
       }
     }
-    if (infn.isEmpty) {
-      System.err.println("Please include --infn FILENAME in your command.")
-      sys.exit(1)
+    go(args, Args())
+  }
+
+  def main(args: Array[String]): Unit = {
+    val a = parseArgs(args.toList) match {
+      case Right(a) => a
+      case Left(usage) =>
+        System.err.println(usage)
+        sys.exit(1)
     }
     val cpus = Tables.localCpus
     val spark: SparkSession = Tables.newSession("graft-wiki", s"local[$cpus]", cpus)
-    val cfg = WikiPipeline.Config(keepLinks = keepLinks, structure = structure,
-      incubator = incubator, vitalFn = vitalfn, expandTemplates = expandTemplates,
-      templateOverflow =
-        if (templateBestEffort) WikiPipeline.TemplateOverflow.BestEffort
-        else WikiPipeline.TemplateOverflow.Fail)
     val t0 = System.nanoTime()
-    val lines = writeCounted(spark, infn, out, cfg, compress)
+    val lines = writeCounted(spark, a.infn, a.out, a.cfg, a.compress)
     val secs = (System.nanoTime() - t0) / 1e9
-    println(f"wrote $lines lines to $out in $secs%.1f s")
+    println(f"wrote $lines lines to ${a.out} in $secs%.1f s")
     spark.stop()
   }
 }

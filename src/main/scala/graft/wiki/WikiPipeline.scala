@@ -226,9 +226,11 @@ object WikiPipeline {
             compress: Boolean = false, maxRecordsPerFile: Long = 100000): Unit = {
     // rendered docs carry their trailing newline (so concatenation equals
     // the reference's output stream); the text sink adds one per row, so
-    // strip ours to keep the written bytes identical to the reference.
+    // strip exactly that one to keep the written bytes identical to the
+    // reference. `\z`, not `$`: `$` also matches before a final "\r\n",
+    // which would eat the newline ahead of a last line holding a lone \r.
     val w = rendered
-      .select(regexp_replace(col("rendered"), "\\n$", "").as("rendered"))
+      .select(regexp_replace(col("rendered"), "\\n\\z", "").as("rendered"))
       .write
       .option("maxRecordsPerFile", maxRecordsPerFile)
     (if (compress) w.option("compression", "bzip2") else w)

@@ -91,11 +91,11 @@ class HitsSpec extends SparkSpec {
     val fixed2 = Hits.run(graph.toDF("src", "dst"), iters = 2).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got2 == fixed2)
-    // Reliable: alternating per-vector slots keep the previous iteration
-    // readable for the comparison
+    // Reliable: the previous iteration's cuts stay readable for the
+    // comparison
     val dir = java.nio.file.Files.createTempDirectory("hits-fp").toString
     val (fp3, used3) = Hits.runUntilFixpoint(ring, maxIters = 15,
-      checkpointing = graft.operators.Checkpointing.Reliable(dir))
+      checkpointing = graft.pipeline.Materialize.Reliable(dir))
     assert(used3 == 2)
     assert(fp3.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == got)

@@ -1222,18 +1222,19 @@ class OperatorSpec extends SparkSpec {
       .toDF("a", "b")
     val local = Dedup.dupClusters(pairs).as[(Long, Long)].collect().toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val reliable = Dedup.dupClusters(pairs, checkpointDir = Some(dir),
+    val reliable = Dedup.dupClusters(pairs,
+        checkpointing = graft.pipeline.Materialize.Reliable(dir),
         driverBound = 0) // force the distributed rounds this spec exercises
       .as[(Long, Long)].collect().toMap
     assert(reliable == local)
     // reliable mode spills rounds into the REQUESTED dir (never a
-    // session-level checkpoint location) under a per-call salted prefix,
-    // and deletes each round as soon as the next supersedes it — only
-    // this run's final round files remain
+    // session-level checkpoint location), one unique path per round, and
+    // deletes each round as soon as the next supersedes it — only this
+    // run's final round files remain
     import scala.jdk.CollectionConverters._
     val rounds = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
       .iterator().asScala.map(_.getFileName.toString)
-      .filter(f => f.startsWith("cc-") && f.contains("-round-")).toSeq
+      .filter(_.startsWith("cc-labels-")).toSeq
     assert(rounds.size == 1, s"expected exactly the final round's spill, found: $rounds")
   }
 

@@ -1,84 +1,91 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.dedup.Dedup
+import graft.pipeline.{Checkpointing, CorpusPipeline, Materialize}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Reliable (parquet round-trip) vs Local lineage cuts must be
-  * result-invisible: a cut only materializes. Also pins the file
-  * lifecycle — each slot keeps at most its latest round file, so a long
-  * run can't fill the checkpoint dir.
+/** Every user of a lineage cut, run under `Materialize.Reliable`:
+  *  - its rows equal the `Local` run's (a cut only materializes);
+  *  - after it returns, the directory holds exactly the cut paths that
+  *    back the returned frame — every superseded round was released;
+  *  - a second run with the same `Reliable` instance succeeds and leaves
+  *    the first run's frame readable (each cut has its own path).
   */
 class CheckpointingSpec extends SparkSpec {
   import spark.implicits._
 
-  private val edges = {
+  private lazy val edges = {
     val e = for (i <- 0L until 60L; k <- Seq(3L, 11L, 23L))
       yield (i % 40, (i * 7 + k) % 40)
-    e.distinct
+    e.distinct.toDF("src", "dst")
+  }
+  private lazy val weighted =
+    edges.withColumn("w", (col("src") + col("dst")) % 5 + 1)
+  private lazy val seeds = Seq(0L, 5L).toDF("node")
+  private lazy val pairs =
+    (0L until 30L).filter(_ % 7 != 6).map(i => (i, i + 1)).toDF("a", "b")
+
+  private val english =
+    "the quick brown fox jumps over the lazy dog and it was happy for the day " * 3
+  private lazy val docs = Seq(
+    (1L, english + "one"),
+    (2L, english + "one"),
+    (3L, english + "two"),
+    (7L, "an entirely different english document about the history of the spark engine " +
+      "that is long enough to pass the quality gate and it was written for this test " * 2)
+  ).toDF("doc_id", "text")
+  private lazy val benchmark =
+    Seq((100L, "benchmark question text that is the held out eval set for this run"))
+      .toDF("doc_id", "text")
+
+  private val cutUsers: Seq[(String, Checkpointing => DataFrame)] = Seq(
+    "PageRank" -> (c => PageRank.run(edges, iters = 3, checkpointing = c)),
+    "PageRank.runUntilFixpoint" ->
+      (c => PageRank.runUntilFixpoint(edges, maxIters = 4, checkpointing = c)._1),
+    "PageRank.personalized" ->
+      (c => PageRank.personalized(edges, seeds, iters = 3, checkpointing = c)),
+    "Hits" -> (c => Hits.run(edges, iters = 3, checkpointing = c)),
+    "Hits.runUntilFixpoint" ->
+      (c => Hits.runUntilFixpoint(edges, maxIters = 3, checkpointing = c)._1),
+    "KCore" -> (c => KCore.membership(edges, 3, checkpointing = c)),
+    "Reachability" -> (c => Reachability.bounded(edges, seeds, 3, c)),
+    "ShortestPaths" -> (c => ShortestPaths.run(weighted, seeds, 3, c)._1),
+    "dupClusters" ->
+      (c => Dedup.dupClusters(pairs, checkpointing = c, driverBound = 0)),
+    "curate" -> (c => CorpusPipeline.curate(docs, "text", "doc_id",
+      CorpusPipeline.Config(nearDupThreshold = 0.6, materialize = c),
+      benchmark = Some(benchmark)))
+  )
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The cut paths (direct children of `dir`) the frame's scans read. */
+  private def backing(df: DataFrame, dir: java.io.File): Set[String] = {
+    val root = dir.getAbsoluteFile.toPath
+    df.inputFiles.map(f => java.nio.file.Paths.get(new java.net.URI(f)))
+      .filter(_.startsWith(root))
+      .map(p => root.relativize(p).getName(0).toString).toSet
   }
 
-  private def tmpDir(tag: String): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$tag").toFile
-    d.deleteOnExit()
-    d
-  }
-
-  test("PageRank: Reliable cuts are row-identical to Local") {
-    val e = edges.toDF("src", "dst")
-    val local = PageRank.run(e, iters = 5, checkpointEvery = 2)
-      .orderBy("node").collect().toSeq
-    val dir = tmpDir("pr")
-    val reliable = PageRank.run(e, iters = 5, checkpointEvery = 2,
-        checkpointing = Checkpointing.Reliable(dir.getAbsolutePath))
-      .orderBy("node").collect().toSeq
-    assert(reliable == local)
-    // per-slot cleanup (round-18 layout: the vector is cut EVERY
-    // iteration on alternating fp0/fp1 slots, plus the seed r0 and the
-    // final out): each slot collapses to its latest round file
-    val left = dir.listFiles().map(_.getName).sorted
-    assert(left.count(_.contains("-fp0-round-")) == 1, left.mkString(","))
-    assert(left.count(_.contains("-fp1-round-")) == 1, left.mkString(","))
-    assert(left.count(_.contains("-r0-round-")) == 1, left.mkString(","))
-    assert(left.count(_.contains("-out-round-")) == 1, left.mkString(","))
-  }
-
-  test("Hits: Reliable cuts are row-identical to Local; slots independent") {
-    val e = edges.toDF("src", "dst")
-    val local = Hits.run(e, iters = 4)
-      .orderBy("node").collect().toSeq
-    val dir = tmpDir("hits")
-    val reliable = Hits.run(e, iters = 4,
-        checkpointing = Checkpointing.Reliable(dir.getAbsolutePath))
-      .orderBy("node").collect().toSeq
-    assert(reliable == local)
-    // 4 per-iteration cuts per slot collapse to one file per slot — the
-    // round-18 layout cuts each half-step's RAW aggregate (ar, hr) —
-    // plus the final out file
-    val left = dir.listFiles().map(_.getName).sorted
-    assert(left.count(_.contains("-ar-round-")) == 1, left.mkString(","))
-    assert(left.count(_.contains("-hr-round-")) == 1, left.mkString(","))
-    assert(left.count(_.contains("-out-round-")) == 1, left.mkString(","))
-  }
-
-  test("Reliable: reuse after a terminal cut fails fast, not destructively") {
-    val e = edges.toDF("src", "dst")
-    val dir = tmpDir("reuse")
-    val ckpt = Checkpointing.Reliable(dir.getAbsolutePath)
-    val first = PageRank.run(e, iters = 3, checkpointEvery = 2,
-      checkpointing = ckpt)
-    val firstRows = first.orderBy("node").collect().toSeq
-    // the documented one-instance-per-invocation rule is now enforced: a
-    // second run's first cut would otherwise delete the round file lazily
-    // backing `first`
-    val ex = intercept[IllegalStateException] {
-      PageRank.run(e, iters = 3, checkpointEvery = 2, checkpointing = ckpt)
+  for ((name, run) <- cutUsers)
+    test(s"$name: Reliable cuts are row-identical to Local") {
+      val local = rows(run(Materialize.Local))
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+      val reliable = Materialize.Reliable(dir.getAbsolutePath)
+      val first = run(reliable)
+      assert(rows(first) == local)
+      val left = dir.list().toSet
+      assert(left.nonEmpty, "the Reliable result is not file-backed")
+      assert(left == backing(first, dir),
+        s"files that back nothing: ${left -- backing(first, dir)}")
+      // the same instance again: fresh paths, the first frame untouched
+      val second = run(reliable)
+      assert(rows(second) == local)
+      assert(rows(first) == local)
+      assert(dir.list().toSet == backing(first, dir) ++ backing(second, dir))
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
-    assert(ex.getMessage.contains("reused"))
-    // and the first run's returned frame is still fully readable
-    assert(first.orderBy("node").collect().toSeq == firstRows)
-    // Local is stateless — reuse is fine
-    val l = Checkpointing.Local
-    PageRank.run(e, iters = 2, checkpointing = l)
-    PageRank.run(e, iters = 2, checkpointing = l)
-  }
 }

@@ -45,7 +45,7 @@ class KCoreSpec extends SparkSpec {
     assert(core(noisy, 2) == core(tri, 2))
     val dir = java.nio.file.Files.createTempDirectory("kcorespec").toString
     val rel = KCore.membership(noisy.toDF("src", "dst"), 2,
-        checkpointing = Checkpointing.Reliable(dir))
+        checkpointing = graft.pipeline.Materialize.Reliable(dir))
       .as[(Long, Long)].collect().toMap
     assert(rel == core(tri, 2))
   }

@@ -77,11 +77,11 @@ class PageRankSpec extends SparkSpec {
     val fixed2 = PageRank.run(chain, iters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got2 == fixed2)
-    // Reliable strategy: the alternating-slot files keep the previous
-    // iteration readable for the comparison; result identical
+    // Reliable policy: the previous iteration's cut stays readable for
+    // the comparison; result identical
     val dir = java.nio.file.Files.createTempDirectory("pr-fp").toString
     val (fp3, used3) = PageRank.runUntilFixpoint(ring, maxIters = 20,
-      checkpointing = Checkpointing.Reliable(dir))
+      checkpointing = graft.pipeline.Materialize.Reliable(dir))
     assert(used3 == 2)
     assert(fp3.collect().map(r => (r.getLong(0), r.getLong(1))).toMap == got)
   }

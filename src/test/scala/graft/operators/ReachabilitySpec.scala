@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.pipeline.{Checkpointing, Materialize}
 import org.apache.spark.sql.functions._
 
 class ReachabilitySpec extends SparkSpec {
@@ -8,7 +9,7 @@ class ReachabilitySpec extends SparkSpec {
 
   private def reach(edges: Seq[(Long, Long)], seeds: Seq[Long],
                     maxHops: Int,
-                    ckpt: Checkpointing = Checkpointing.Local) =
+                    ckpt: Checkpointing = Materialize.Local) =
     Reachability.bounded(edges.toDF("src", "dst"), seeds.toDF("node"),
         maxHops, ckpt)
       .as[(Long, Long)].collect().toMap
@@ -43,7 +44,7 @@ class ReachabilitySpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 4L))
     val dir = java.nio.file.Files.createTempDirectory("reachspec").toString
     val local = reach(edges, Seq(1L), 3)
-    val reliable = reach(edges, Seq(1L), 3, Checkpointing.Reliable(dir))
+    val reliable = reach(edges, Seq(1L), 3, Materialize.Reliable(dir))
     assert(local == reliable, s"$local vs $reliable")
     intercept[IllegalArgumentException] {
       Reachability.bounded(edges.toDF("src", "dst"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.pipeline.{Checkpointing, Materialize}
 import org.apache.spark.sql.functions._
 
 class ShortestPathsSpec extends SparkSpec {
@@ -8,7 +9,7 @@ class ShortestPathsSpec extends SparkSpec {
 
   private def run(edges: Seq[(Long, Long, Long)], seeds: Seq[Long],
                   maxRounds: Int,
-                  cp: Checkpointing = Checkpointing.Local) = {
+                  cp: Checkpointing = Materialize.Local) = {
     val (df, rounds) = ShortestPaths.run(
       edges.toDF("src", "dst", "w"), seeds.toDF("node"), maxRounds, cp)
     (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
@@ -59,7 +60,7 @@ class ShortestPathsSpec extends SparkSpec {
       (2L, 4L, 1L))
     val dir = java.nio.file.Files.createTempDirectory("sssp").toString
     val (got, rounds) = run(edges, Seq(1L), maxRounds = 10,
-      Checkpointing.Reliable(dir))
+      Materialize.Reliable(dir))
     assert(got == Map(1L -> 0L, 2L -> 2L, 3L -> 1L, 4L -> 3L))
     assert(rounds == 4)
   }

@@ -335,6 +335,32 @@ class WikiPipelineSpec extends SparkSpec {
     assert(back.sorted.toSeq == expectedLines.sorted.toSeq)
   }
 
+  test("write keeps a final lone \\r line (from &#13;) byte-exact") {
+    val dump = new String(getClass.getResourceAsStream("/wiki_e2e_dump.xml").readAllBytes(), "UTF-8")
+    val page = """  <page>
+                 |    <title>Carriage</title>
+                 |    <ns>0</ns>
+                 |    <id>9</id>
+                 |    <revision>
+                 |      <id>109</id>
+                 |      <text xml:space="preserve">First line.
+                 |&amp;#13;</text>
+                 |    </revision>
+                 |  </page>
+                 |""".stripMargin
+    val p = Files.createDirectories(Paths.get("target/tmp")).resolve("wiki_cr_dump.xml")
+    Files.writeString(p, dump.substring(0, dump.indexOf("  <page>")) + page + "</mediawiki>\n")
+    val rendered = WikiPipeline.run(spark, p.toString)
+    val want = rendered.select("rendered").collect().map(_.getString(0)).mkString
+    assert(want.endsWith("\n\r\n"), s"the page must render a final lone \\r line: $want")
+    val out = "target/tmp/wiki_out_cr"
+    WikiPipeline.write(rendered, out)
+    val got = Files.list(Paths.get(out)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+      .map(f => new String(Files.readAllBytes(f), "UTF-8")).mkString
+    assert(got == want)
+  }
+
   /** Lines of the text files in `dir`, each read through the Hadoop codec
     * its name selects (none for plain files).
     */
